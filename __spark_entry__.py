@@ -42,34 +42,36 @@ _FLAGSHIP = "agg_sum_groupby"
 # stale queue can never burn a later round's budget re-checking green rows.
 # Bump _QUEUE_AS_OF to the highest CORRECTNESS_r*.json round present whenever
 # the queue is edited.
-_QUEUE_AS_OF = 15
+_QUEUE_AS_OF = 16
 _RECHECK_QUEUE: tuple[str, ...] = (
-    # --- Round-16 changed queries (optimization round 2): the near-dup
-    # family gained bounded-lifetime pins and a distributed dense-rank
-    # dictionary in token_bitsets (values invariant under the id
-    # bijection, but the physical plan changed substantially), and the
-    # banded-Hamming expansion gained the latent-case guards from r15
-    # ADVICE items 1–2. All re-verified locally by full-value oracle diff
-    # at sf0.001 + sf0.01 and a vanilla-session probe; queued so the
-    # driver re-pins the hashes first.
+    # --- Oracle-changed queries: MinHash moved to ONE hash family (an
+    # md5-prefix base hash per token, then exact integer permutations —
+    # functions/minhash.py), so the signatures, band buckets and banding
+    # misses of every MinHash query changed, in the Spark code AND in the
+    # oracle SQL, in lockstep. Re-verified locally by full-value oracle
+    # diff at sf0.001 and sf0.01 under a vanilla session.
+    # pipeline_corpus_manifest has no MinHash stage (its oracle is
+    # unchanged); it rides along as the clean pipeline's checked core.
     "dedup_minhash_pairs",
     "dedup_minhash_recall",
+    "contam_neardup",
+    "dedup_incremental_batch",
+    "dedup_incremental_indexed",
+    "pipeline_corpus_manifest",
+    "pipeline_corpus_clean",
+    # --- Code-changed, same oracle: the prefix filters now share one
+    # rarity-prefix helper (functions/similarity.py; identical physical
+    # plan) and the Jaccard threshold guard raises ValueError.
     "sim_jaccard_prefix",
     "sim_containment_prefix",
     "sim_containment_pairs",
-    "pipeline_corpus_clean",
-    "sim_ann_lsh_recall",
-    "multimodal_video_neardup",
-    "multimodal_phash_near",
-    "multimodal_audio_neardup",
-    # (dedup_minhash_pairs_xx also changed but is rows-only by design; it
-    # rejoins via the fresh tier if its r15 record goes stale.)
     #
-    # The r15 rotation tranche (47 names) was hand-removed this round: all
-    # 47 verified green in CORRECTNESS_r15 (checked programmatically), and
-    # with _QUEUE_AS_OF now 15 the self-retire rule (> 15) would not have
-    # released them. Leftover budget after this queue rotates through the
-    # oldest-verified greens automatically (_ordered tier 3).
+    # The r16 tranche's other four names (sim_ann_lsh_recall and the three
+    # multimodal near-dup rows) were hand-removed: all verified green in
+    # CORRECTNESS_r16 and untouched since, and with _QUEUE_AS_OF now 16 the
+    # self-retire rule (> 16) would not have released them. Leftover budget
+    # after this queue rotates through the oldest-verified greens
+    # automatically (_ordered tier 3).
 )
 
 

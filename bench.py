@@ -225,7 +225,6 @@ R12_HEADLINE = [
 R13_HEADLINE = [
     "geo_point_in_polygon",       # r13: zero-shuffle broadcast-grid ray cast
     "text_boilerplate_strip",     # r13: line counts + broadcast hot-set strip
-    "contam_neardup_xx",          # r13: decontamination at xxhash64 wire width
 ]
 
 R15_HEADLINE = [

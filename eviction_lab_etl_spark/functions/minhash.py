@@ -1,9 +1,8 @@
 """Native MinHash + LSH banding (shingle → minhash → band → bucket-join).
 
 Engine-owned alternative to ``pyspark.ml.feature.MinHashLSH`` (used by the
-``sim_ann_lsh`` operator): fully deterministic (a seeded hash family — no
-fitted model, no RNG; default ``xxhash64(seed_i, token)``, pluggable to the
-``md5_family`` below when a DuckDB oracle must reproduce the signatures),
+``sim_ann_lsh`` operator): fully deterministic (one fixed hash family — no
+fitted model, no RNG — that a DuckDB oracle rebuilds value for value),
 entirely JVM-side expressions, and the banding is explicit so the candidate
 join is a plain shuffle on (band, slice-values) — the textbook bucket-join
 that replaces the O(n²) pair space at corpus scale.
@@ -20,15 +19,10 @@ pay the exact verification join.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import hashlib
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# Seeded hash family: (seed, token column) -> bigint hash. The default is
-# xxhash64 (fastest JVM-side choice); pass md5_family when the result must
-# be reproducible in a DuckDB oracle (xxhash64 exists only in Spark).
-HashFamily = Callable[[int, Column], Column]
 
 # 60-bit hash width: the widest md5 hex prefix that always fits a signed
 # bigint. The ONE canonical definition of the cross-engine idiom — both
@@ -36,15 +30,10 @@ HashFamily = Callable[[int, Column], Column]
 MD5_PREFIX_HEX = 15
 
 
-def xxhash_family(seed: int, col: Column) -> Column:
-    return F.xxhash64(F.lit(seed), col)
-
-
 def md5_family(seed: int, col: Column) -> Column:
     """Seeded md5-prefix 60-bit hash — the only 64-bit-ish hash family both
     Spark and DuckDB can evaluate identically (Spark parses the hex prefix
     with ``conv``, DuckDB with a ``'0x'||…`` cast — ``md5_family_duck``).
-    Slower than xxhash64; use it where an oracle must rebuild signatures.
 
     NULL tokens hash to NULL: ``F.concat`` propagates NULL exactly like
     DuckDB's ``||`` in ``md5_family_duck`` (a ``concat_ws`` spelling would
@@ -68,60 +57,93 @@ def md5_family_duck(seed: int, token_sql: str = "w") -> str:
     )
 
 
+# MinHash family (Broder's min-wise permutations): each token is hashed ONCE
+# to a base value x = md5_family(0, w) mod 2^28, and signature slot i is
+# min over the doc's tokens of (a_i·x + b_i) mod (2^31 − 1). With a_i, b_i
+# below the Mersenne prime and x below 2^28, a_i·x + b_i < 2^59 + 2^31 —
+# exact BIGINT arithmetic in both engines, far from overflow (and from the
+# ANSI overflow error). Tokens whose base values collide (≈ V²/2^29 pairs
+# for a vocabulary of V) act as one token for banding only; verification
+# stays exact over the token strings.
+MINHASH_PRIME = (1 << 31) - 1
+MINHASH_X_MOD = 1 << 28
+
+
+def minhash_perm(i: int) -> tuple[int, int]:
+    """``(a_i, b_i)`` of signature slot ``i``: fixed constants derived from
+    md5 of the slot index, with ``1 <= a_i < p`` and ``0 <= b_i < p``."""
+    d = hashlib.md5(f"minhash|{i}".encode()).digest()
+    a = 1 + int.from_bytes(d[:8], "big") % (MINHASH_PRIME - 1)
+    b = int.from_bytes(d[8:], "big") % MINHASH_PRIME
+    return a, b
+
+
 def minhash_signatures(
     tokens: DataFrame,
     id_col: str = "id",
     token_col: str = "w",
     n_hashes: int = 96,
-    hash_fn: HashFamily = xxhash_family,
-    hash_distinct_tokens: bool = False,
 ) -> DataFrame:
     """One row per document: ``(id, sig array<bigint>)`` of n_hashes minhash
     values, computed as a single grouped aggregation (no per-hash shuffle).
+    The base hash is evaluated once per row in a projection below the
+    aggregate; each slot then costs one multiply-add and one modulo.
 
-    Distinct-token CONTRACT: tokens must be NON-NULL (r15 ADVICE item 3).
-    The ``hash_distinct_tokens=True`` join-back drops NULL tokens (inner
-    join on ``__w``), while the inline path would min() over a NULL hash —
-    every registered caller tokenizes via split/explode, which cannot
-    produce NULLs, and ``token_bitsets``' vocabulary join imposes the same
-    contract on the verification side.
-
-    ``hash_distinct_tokens=True`` evaluates the n_hashes family members once
-    per DISTINCT token string and joins the hash vectors back to the
-    (id, token) rows instead of hashing inline per row — identical values
-    (the family depends only on (seed, token)), but the hash work scales
-    with |vocabulary| instead of Σ|doc tokens|. Worth it exactly when tokens
-    repeat across documents (the symmetric word-level dedup path: the
-    fixture's 31-word vocabulary cuts md5 work ~3700×, and AQE broadcasts
-    the tiny vector table); at ~1.0 duplication (contam_neardup's 5-gram
-    shingles, measured 1.06×) the join-back costs more than it saves, so
-    the asymmetric batch path keeps inline hashing."""
-    if hash_distinct_tokens:
-        hv = tokens.select(F.col(token_col).alias("__w")).distinct().select(
-            "__w",
-            F.array(
-                *[hash_fn(i, F.col("__w")) for i in range(n_hashes)]
-            ).alias("__hv"),
+    Token CONTRACT: tokens must be NON-NULL. A NULL
+    token hashes to NULL and is skipped by min(); every registered caller
+    tokenizes via split/explode, which cannot produce NULLs, and
+    ``token_bitsets``' vocabulary join imposes the same contract on the
+    verification side."""
+    based = tokens.select(
+        F.col(id_col).alias("id"),
+        F.pmod(md5_family(0, F.col(token_col)), F.lit(MINHASH_X_MOD)).alias("__x"),
+    )
+    aggs = []
+    for i in range(n_hashes):
+        a, b = minhash_perm(i)
+        aggs.append(
+            F.min((F.lit(a) * F.col("__x") + F.lit(b)) % F.lit(MINHASH_PRIME))
+            .alias(f"__h{i}")
         )
-        wide = (
-            tokens.select(F.col(id_col).alias("id"), F.col(token_col).alias("__w"))
-            .join(hv, "__w")
-            .groupBy("id")
-            .agg(
-                *[
-                    F.min(F.element_at("__hv", i + 1)).alias(f"__h{i}")
-                    for i in range(n_hashes)
-                ]
-            )
-        )
-    else:
-        aggs = [
-            F.min(hash_fn(i, F.col(token_col))).alias(f"__h{i}")
-            for i in range(n_hashes)
-        ]
-        wide = tokens.groupBy(F.col(id_col).alias("id")).agg(*aggs)
-    return wide.select(
+    return based.groupBy("id").agg(*aggs).select(
         "id", F.array(*[f"__h{i}" for i in range(n_hashes)]).alias("sig")
+    )
+
+
+def minhash_sig_duck(
+    n_hashes: int, from_sql: str, token_sql: str = "w", id_sql: str = "doc_id"
+) -> str:
+    """DuckDB-SQL spelling of ``minhash_signatures``: a SELECT over
+    ``FROM {from_sql}`` (a relation, optionally with a WHERE clause)
+    yielding ``id_sql, h0 … h{n_hashes-1}`` — the same values as the Spark
+    signature array, slot for slot. The base hash is computed once per row
+    in a subquery, exactly like the Spark projection."""
+    hs = ",\n               ".join(
+        f"min(({a} * x + {b}) % {MINHASH_PRIME}) AS h{i}"
+        for i, (a, b) in enumerate(map(minhash_perm, range(n_hashes)))
+    )
+    return (
+        f"SELECT {id_sql},\n               {hs}\n"
+        f"        FROM (SELECT {id_sql}, "
+        f"{md5_family_duck(0, token_sql)} % {MINHASH_X_MOD} AS x "
+        f"FROM {from_sql})\n"
+        f"        GROUP BY {id_sql}"
+    )
+
+
+def minhash_band_eq_duck(bands: int, rows_per_band: int) -> str:
+    """DuckDB-SQL spelling of the banded candidacy test over two
+    ``minhash_sig_duck`` rows aliased ``a`` and ``b``: true iff some band's
+    whole slice of ``rows_per_band`` values is equal — exactly the
+    struct-key equality of ``band_buckets``/``lsh_candidate_pairs``."""
+    return "\n           OR ".join(
+        "("
+        + " AND ".join(
+            f"a.h{k * rows_per_band + j} = b.h{k * rows_per_band + j}"
+            for j in range(rows_per_band)
+        )
+        + ")"
+        for k in range(bands)
     )
 
 
@@ -200,7 +222,6 @@ def minhash_near_dup_pairs(
     threshold: tuple[int, int] = (6, 10),
     bands: int = 32,
     rows_per_band: int = 3,
-    hash_fn: HashFamily = xxhash_family,
 ) -> DataFrame:
     """LSH-accelerated near-dup join: band candidates, then exact-verify each
     candidate's true Jaccard with integer cross-multiplication. Output
@@ -213,11 +234,11 @@ def minhash_near_dup_pairs(
 
     1. SIGNATURE-GROUP banding: banding candidacy is a function of the
        signature alone, so docs with equal signatures (identical token
-       sets, plus any md5-coincident ones) collapse to one representative
-       before the quadratic bucket join and expand back afterwards —
-       every intra-group pair is a candidate by construction (all bands
-       equal), every cross-group member pair inherits its group pair's
-       candidacy. On the duplicate-dense fixture this cuts the bucket
+       sets, plus any base-hash-coincident ones) collapse to one
+       representative before the quadratic bucket join and expand back
+       afterwards — every intra-group pair is a candidate by construction
+       (all bands equal), every cross-group member pair inherits its
+       group pair's candidacy. On the duplicate-dense fixture this cuts the bucket
        join's pre-distinct pair stream 3× (60.0M → 19.9M at sf0.1); on a
        duplicate-free corpus it degenerates to singleton groups at the
        cost of one doc-count-sized aggregation. (Grouping by the token
@@ -239,9 +260,7 @@ def minhash_near_dup_pairs(
     )
 
     tok = tokens.select(F.col(id_col).alias("id"), F.col(token_col).alias("w"))
-    sig = minhash_signatures(
-        tok, "id", "w", bands * rows_per_band, hash_fn, hash_distinct_tokens=True
-    )
+    sig = minhash_signatures(tok, "id", "w", bands * rows_per_band)
     groups = sig.groupBy("sig").agg(
         F.min("id").alias("id"), F.collect_list("id").alias("ms")
     )
@@ -282,7 +301,6 @@ def corpus_minhash_index(
     corpus_tokens: DataFrame,
     bands: int = 32,
     rows_per_band: int = 3,
-    hash_fn: HashFamily = xxhash_family,
 ) -> tuple[DataFrame, DataFrame]:
     """The COMMIT-TIME LSH index for `minhash_batch_matches`: the corpus's
     band buckets ``(a, band, key)`` and per-doc token sizes ``(a, cn)`` —
@@ -291,15 +309,11 @@ def corpus_minhash_index(
     the new files, the same append-only discipline as the data), so that
     ingest-time admission pays O(batch + candidates), never O(corpus);
     `tools/scale_stress.py --incremental` measures exactly that split."""
-    ctok = corpus_tokens.select(F.col("id").alias("cid"), "w")
-    csig = minhash_signatures(
-        ctok.select(F.col("cid").alias("id"), "w"),
-        "id", "w", bands * rows_per_band, hash_fn,
-    )
+    csig = minhash_signatures(corpus_tokens, "id", "w", bands * rows_per_band)
     cb = band_buckets(csig, bands, rows_per_band).select(
         F.col("id").alias("a"), "band", "key"
     )
-    csz = ctok.groupBy(F.col("cid").alias("a")).agg(
+    csz = corpus_tokens.groupBy(F.col("id").alias("a")).agg(
         F.count(F.lit(1)).alias("cn")
     )
     return cb, csz
@@ -311,7 +325,6 @@ def minhash_batch_matches(
     threshold: tuple[int, int] = (6, 10),
     bands: int = 32,
     rows_per_band: int = 3,
-    hash_fn: HashFamily = xxhash_family,
     corpus_index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """ASYMMETRIC near-dup matching — a small new batch against the big
@@ -334,16 +347,12 @@ def minhash_batch_matches(
     n_hashes = bands * rows_per_band
     btok = batch_tokens.select(F.col("id").alias("bid"), "w")
     ctok = corpus_tokens.select(F.col("id").alias("cid"), "w")
-    bsig = minhash_signatures(
-        btok.select(F.col("bid").alias("id"), "w"), "id", "w", n_hashes, hash_fn
-    )
+    bsig = minhash_signatures(batch_tokens, "id", "w", n_hashes)
     bb = band_buckets(bsig, bands, rows_per_band).select(
         F.col("id").alias("b"), "band", "key"
     )
     if corpus_index is None:
-        cb, csz = corpus_minhash_index(
-            corpus_tokens, bands, rows_per_band, hash_fn
-        )
+        cb, csz = corpus_minhash_index(corpus_tokens, bands, rows_per_band)
     else:
         cb, csz = corpus_index
     cand = (

@@ -35,8 +35,12 @@ import weakref
 
 from pyspark.sql import DataFrame
 
-_PINS_ATTR = "_elspark_pins"
-_FIN_ATTR = "_elspark_pin_finalizer"
+# Pin bookkeeping, held off the DataFrame (whose ``__getattr__`` resolves
+# unknown attributes as COLUMNS — every miss an analysis round-trip) and
+# keyed weakly, so it never extends a handle's life: result handle -> the
+# finalizer that unpersists its pinned frames, or None once ``adopt_pins``
+# has moved those frames to a child.
+_PINS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def pin_to(result: DataFrame, *frames: DataFrame) -> DataFrame:
@@ -56,34 +60,40 @@ def adopt_pins(child: DataFrame, *parents: DataFrame) -> DataFrame:
     (``return adopt_pins(out, pairs)``): the parents' finalizers are
     detached (they would otherwise fire — and unpersist — as soon as the
     deriving function's locals die) and one new finalizer on ``child``
-    owns the combined set. Parents without pins are ignored, so callers
-    need not know whether a library function pins anything."""
+    owns the combined set. Parents that never carried pins are ignored, so
+    callers need not know whether a library function pins anything; a
+    parent whose pins were ALREADY adopted raises ``ValueError`` — the
+    second child would silently run without the cache."""
     holder: list[DataFrame] = []
     for p in parents:
-        pins = getattr(p, _PINS_ATTR, None)
-        if not pins:
+        if p not in _PINS:
             continue
-        fin = getattr(p, _FIN_ATTR, None)
-        if fin is not None:
-            fin.detach()
-        setattr(p, _PINS_ATTR, None)
-        holder.extend(pins)
+        fin = _PINS[p]
+        if fin is None:
+            raise ValueError(
+                "adopt_pins: this parent's pins were already adopted by "
+                "another frame"
+            )
+        _PINS[p] = None
+        holder.extend(_detach(fin))
     if holder:
         _attach(child, holder)
     return child
 
 
 def _attach(df: DataFrame, holder: list[DataFrame]) -> None:
-    prev = getattr(df, _PINS_ATTR, None)
-    if prev:
-        fin = getattr(df, _FIN_ATTR, None)
-        if fin is not None:
-            fin.detach()
-        holder = list(prev) + holder
-    setattr(df, _PINS_ATTR, holder)
+    prev = _PINS.get(df)
+    if prev is not None:
+        holder = _detach(prev) + holder
     fin = weakref.finalize(df, _unpersist_all, holder)
     fin.atexit = False
-    setattr(df, _FIN_ATTR, fin)
+    _PINS[df] = fin
+
+
+def _detach(fin: weakref.finalize) -> list[DataFrame]:
+    """Cancel ``fin`` and return the pinned frames it would have released."""
+    _, _, (frames,), _ = fin.detach()
+    return frames
 
 
 def _unpersist_all(frames: list[DataFrame]) -> None:

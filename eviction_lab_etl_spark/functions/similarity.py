@@ -223,6 +223,29 @@ def expand_group_pairs(rep_pairs: DataFrame, groups: DataFrame) -> DataFrame:
     return inter_group.unionByName(intra_group)
 
 
+def _rarity_prefix(tok: DataFrame, threshold: tuple[int, int]) -> DataFrame:
+    """``(id, w)``: each document's |A| − ⌈t·|A|⌉ + 1 globally-rarest
+    tokens of an ``(id, w)`` distinct-token frame — the prefix both the
+    symmetric (Jaccard) and one-sided (containment) filters index. Rarity
+    ranks by global token frequency, ties broken by the token string, so
+    the order is one consistent total order (integer ceil:
+    ``(num*n + den - 1) div den``)."""
+    num, den = threshold
+    sizes = tok.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
+    freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
+    rarity = Window.partitionBy("id").orderBy("freq", "w")
+    return (
+        tok.join(freq, "w")
+        .withColumn("rnk", F.row_number().over(rarity))
+        .join(sizes, "id")
+        .filter(
+            F.col("rnk")
+            <= F.col("n") - F.expr(f"(({num} * n + {den} - 1) div {den})") + 1
+        )
+        .select("id", "w")
+    )
+
+
 def prefix_candidate_pairs(
     tokens: DataFrame,
     id_col: str = "doc_id",
@@ -233,25 +256,8 @@ def prefix_candidate_pairs(
     whose rarity-prefixes share at least one token. Exposed separately so
     tools/scale_stress.py can put a number on the pruning vs the all-token
     index; ``jaccard_pairs_prefix`` verifies exactly these pairs."""
-    num, den = threshold
     tok = tokens.select(F.col(id_col).alias("id"), F.col(token_col).alias("w"))
-
-    sizes = tok.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-
-    # Rank each doc's tokens by global rarity; keep the prefix
-    # |A| - ceil(t*|A|) + 1 (integer ceil: (num*n + den - 1) div den).
-    rarity = Window.partitionBy("id").orderBy("freq", "w")
-    prefix = (
-        tok.join(freq, "w")
-        .withColumn("rnk", F.row_number().over(rarity))
-        .join(sizes, "id")
-        .filter(
-            F.col("rnk")
-            <= F.col("n") - F.expr(f"(({num} * n + {den} - 1) div {den})") + 1
-        )
-        .select("id", "w")
-    )
+    prefix = _rarity_prefix(tok, threshold)
 
     # The prefix frame feeds BOTH sides of the self-join; its lineage (two
     # joins + a rank window over the token explosion) does not canonicalize
@@ -299,7 +305,8 @@ def jaccard_pairs_prefix(
     num, den = threshold
     # expand_group_pairs emits intra-group (J = 1) pairs unconditionally —
     # sound exactly when the threshold admits J = 1 (r15 ADVICE item 5).
-    assert num <= den, f"threshold {num}/{den} > 1 can never match"
+    if num > den:
+        raise ValueError(f"threshold {num}/{den} > 1 can never match")
     tok = tokens.select(F.col(id_col).alias("id"), F.col(token_col).alias("w"))
     groups = grouped_token_masks(tok)
     rep_tok = tok.join(
@@ -392,21 +399,8 @@ def containment_pairs_prefix(
     num, den = threshold
     tok = tokens.select(F.col(id_col).alias("id"), F.col(token_col).alias("w"))
 
-    sizes = tok.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-
-    # Probe-side rarity prefix: |A| - ceil(t*|A|) + 1 rarest tokens of A.
-    rarity = Window.partitionBy("id").orderBy("freq", "w")
-    prefix = (
-        tok.join(freq, "w")
-        .withColumn("rnk", F.row_number().over(rarity))
-        .join(sizes, "id")
-        .filter(
-            F.col("rnk")
-            <= F.col("n") - F.expr(f"(({num} * n + {den} - 1) div {den})") + 1
-        )
-        .select("id", "w")
-    )
+    # Probe-side rarity prefix (one-sided: only src is prefix-indexed).
+    prefix = _rarity_prefix(tok, threshold)
     if probe_filter is not None:
         prefix = prefix.filter(probe_filter)
 

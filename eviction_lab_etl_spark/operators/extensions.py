@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 from eviction_lab_etl_spark import fixtures
 from eviction_lab_etl_spark.functions.determinism import big
 from eviction_lab_etl_spark.functions.minhash import (
-    md5_family as _mh_spark_family,
-    md5_family_duck as _mh_duck_hash,
+    minhash_band_eq_duck,
+    minhash_sig_duck,
 )
 from eviction_lab_etl_spark.operators.dedup_text import cosine
 from eviction_lab_etl_spark.registry import query
@@ -699,10 +699,11 @@ def text_fingerprint(spark, sf_dir):
 # The §2.J contract covers MinHash-LSH via `sim_ann_lsh` (pyspark.ml
 # MinHashLSH — rows-only, its fitted permutations are engine-private). The
 # two queries below make the MinHash dedup family hash-checked like SimHash
-# and Jaccard: the engine-owned banding in functions/minhash.py runs with the
-# md5-prefix 60-bit hash family (the only portable hash both engines share),
-# so a DuckDB oracle reproduces the SAME signatures, the SAME band buckets,
-# and therefore the SAME candidate set — banding false negatives and all.
+# and Jaccard: the engine-owned banding in functions/minhash.py runs one
+# fixed family (an md5-prefix base hash per token, then exact integer
+# permutations) that DuckDB evaluates value for value (`minhash_sig_duck`),
+# so the oracle reproduces the SAME signatures, the SAME band buckets, and
+# therefore the SAME candidate set — banding false negatives and all.
 # The approximation itself becomes deterministic, cross-engine-checkable
 # behavior instead of an unverifiable black box.
 
@@ -710,17 +711,13 @@ _MH_BANDS = 16
 _MH_ROWS = 3
 _MH_NUM, _MH_DEN = 3, 5  # Jaccard ≥ 0.6, integer cross-multiplied (§2.0 rule 1)
 
-_MH_SIG_COLS = ",\n               ".join(
-    f"min({_mh_duck_hash(i)}) AS h{i}" for i in range(_MH_BANDS * _MH_ROWS)
-)
-_MH_BAND_EQ = "\n           OR ".join(
-    "("
-    + " AND ".join(
-        f"a.h{b * _MH_ROWS + j} = b.h{b * _MH_ROWS + j}" for j in range(_MH_ROWS)
-    )
-    + ")"
-    for b in range(_MH_BANDS)
-)
+_MH_BAND_EQ = minhash_band_eq_duck(_MH_BANDS, _MH_ROWS)
+
+
+def _mh_sig_duck(from_sql: str) -> str:
+    """The oracles' signature CTE body at the registered 16×3 banding."""
+    return minhash_sig_duck(_MH_BANDS * _MH_ROWS, from_sql)
+
 
 # Shared oracle CTEs: signatures → banded candidates → exact-verified pairs.
 _MH_ORACLE_CTES = f"""
@@ -728,11 +725,7 @@ _MH_ORACLE_CTES = f"""
         SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
         FROM documents
     ),
-    sig AS (
-        SELECT doc_id,
-               {_MH_SIG_COLS}
-        FROM tok GROUP BY doc_id
-    ),
+    sig AS ({_mh_sig_duck("tok")}),
     cand AS (
         SELECT a.doc_id AS a, b.doc_id AS b
         FROM sig a JOIN sig b ON a.doc_id < b.doc_id
@@ -766,7 +759,7 @@ def dedup_minhash_pairs(spark, sf_dir):
     least one whole band (struct-equality bucket join — zero hash-collision
     false candidates), then exact Jaccard ≥ 0.6 verification by integer
     cross-multiplication (functions/minhash.py). The oracle rebuilds the
-    identical signatures from the shared md5-prefix family, so the driver's
+    identical signatures from the shared hash family, so the oracle's
     value hash pins the banding itself — misses included — not just the
     verified survivors. At 100 TB the plan is: one shuffle on doc_id for
     signatures (48 longs per doc), one shuffle on (band, slice-values) for
@@ -787,7 +780,6 @@ def dedup_minhash_pairs(spark, sf_dir):
         threshold=(_MH_NUM, _MH_DEN),
         bands=_MH_BANDS,
         rows_per_band=_MH_ROWS,
-        hash_fn=_mh_spark_family,
     )
     out = pairs.select(
         F.col("a"), F.col("b"), big(F.col("inter")).alias("inter"),
@@ -795,49 +787,6 @@ def dedup_minhash_pairs(spark, sf_dir):
     )
     # adopt_pins: the library pins its group/mask diamonds to `pairs`;
     # deriving drops that handle, so the pins move to the returned frame.
-    return adopt_pins(out, pairs)
-
-
-@query("dedup_minhash_pairs_xx")  # rows-only: xxhash64 exists only in Spark
-def dedup_minhash_pairs_xx(spark, sf_dir):
-    """dedup_minhash_pairs at PRODUCTION wire width: the identical
-    MinHash-LSH flow with the signature family swapped from md5-prefix to
-    seeded ``xxhash64`` — the contam_neardup_xx move applied to the
-    symmetric MinHash path, so the hash family a 100 TB run would actually
-    use is itself a driver-visible registration (the md5 family pays a
-    128-bit hash + 15-hex ``conv`` parse at every hash site purely for
-    DuckDB oracle reproducibility; tools/hashfamily_ab.py measures the
-    delta on BOTH paths — see SCALE.md). DuckDB cannot evaluate xxhash64,
-    so this row is rows-only by design; semantics are pinned instead by
-    tests/test_library.py::test_dedup_minhash_xx_family_agreement: (1)
-    every emitted pair's (inter, uni) is the EXACT verification values
-    (family-independent), agreeing with the md5 registration on all shared
-    pairs, and (2) both bandings recall the fixture corpus's qualified
-    pairs at the same measured floor (only the banding false-negative SET
-    may differ between families)."""
-    from eviction_lab_etl_spark.functions.minhash import (
-        minhash_near_dup_pairs,
-        xxhash_family,
-    )
-    from eviction_lab_etl_spark.functions.pins import adopt_pins
-
-    docs = load(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w")
-    )
-    pairs = minhash_near_dup_pairs(
-        tok,
-        "doc_id",
-        "w",
-        threshold=(_MH_NUM, _MH_DEN),
-        bands=_MH_BANDS,
-        rows_per_band=_MH_ROWS,
-        hash_fn=xxhash_family,
-    )
-    out = pairs.select(
-        F.col("a"), F.col("b"), big(F.col("inter")).alias("inter"),
-        big(F.col("uni")).alias("uni"),
-    )
     return adopt_pins(out, pairs)
 
 
@@ -890,7 +839,6 @@ def dedup_minhash_recall(spark, sf_dir):
         threshold=(_MH_NUM, _MH_DEN),
         bands=_MH_BANDS,
         rows_per_band=_MH_ROWS,
-        hash_fn=_mh_spark_family,
     )
     exact = jaccard_pairs_prefix(tok, "doc_id", "w", (_MH_NUM, _MH_DEN))
     out = (

@@ -648,24 +648,13 @@ def incr_scd2_build(spark, sf_dir):
 # files, so reading "what changed in v2" costs O(batch), never O(corpus).
 
 from eviction_lab_etl_spark.functions.minhash import (  # noqa: E402
-    md5_family_duck as _ib_duck_hash,
+    minhash_band_eq_duck,
+    minhash_sig_duck,
 )
 
 _IB_BANDS = 16
 _IB_ROWS = 3
 _IB_NUM, _IB_DEN = 9, 10  # Jaccard >= 0.9: the near-identical re-crawl gate
-
-_IB_SIG_COLS = ",\n               ".join(
-    f"min({_ib_duck_hash(i)}) AS h{i}" for i in range(_IB_BANDS * _IB_ROWS)
-)
-_IB_BAND_EQ = "\n           OR ".join(
-    "("
-    + " AND ".join(
-        f"a.h{b * _IB_ROWS + j} = b.h{b * _IB_ROWS + j}" for j in range(_IB_ROWS)
-    )
-    + ")"
-    for b in range(_IB_BANDS)
-)
 
 
 def _ingest_snapshot_fixture(spark, sf_dir, prefix: str):
@@ -721,20 +710,12 @@ _IB_ORACLE = f"""
         SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
         FROM batch
     ),
-    osig AS (
-        SELECT doc_id,
-               {_IB_SIG_COLS}
-        FROM otok GROUP BY doc_id
-    ),
-    bsig AS (
-        SELECT doc_id,
-               {_IB_SIG_COLS}
-        FROM btok GROUP BY doc_id
-    ),
+    osig AS ({minhash_sig_duck(_IB_BANDS * _IB_ROWS, "otok")}),
+    bsig AS ({minhash_sig_duck(_IB_BANDS * _IB_ROWS, "btok")}),
     cand AS (
         SELECT b.doc_id AS bid, a.doc_id AS oid
         FROM bsig b JOIN osig a
-          ON {_IB_BAND_EQ}
+          ON {minhash_band_eq_duck(_IB_BANDS, _IB_ROWS)}
     ),
     osz AS (SELECT doc_id, count(*) AS n FROM otok GROUP BY doc_id),
     bsz AS (SELECT doc_id, count(*) AS n FROM btok GROUP BY doc_id),
@@ -773,8 +754,8 @@ def dedup_incremental_batch(spark, sf_dir):
     own immutable files — an O(batch) read with no corpus scan and no
     row-level exceptAll), then MinHash-band it against the v1 corpus read
     by time travel and exact-verify every banded candidate at Jaccard ≥
-    0.9 (functions/minhash.py `minhash_batch_matches`, md5-prefix family —
-    the oracle rebuilds the identical signatures, buckets, misses and
+    0.9 (functions/minhash.py `minhash_batch_matches`, shared MinHash
+    family — the oracle rebuilds the identical signatures, buckets, misses and
     verdicts from the `documents` table, so the driver hash pins the
     snapshot roundtrip AND the approximation). Emits the per-batch-doc
     admission ledger (banded candidate count, verified near count,
@@ -787,10 +768,7 @@ def dedup_incremental_batch(spark, sf_dir):
     join; verification touches only candidate-scoped corpus tokens; the one
     corpus-sized pass (signature build = the LSH index) is the amortized
     commit-time artifact, and cost per ingest is O(batch + candidates)."""
-    from eviction_lab_etl_spark.functions.minhash import (
-        md5_family,
-        minhash_batch_matches,
-    )
+    from eviction_lab_etl_spark.functions.minhash import minhash_batch_matches
 
     table = _ingest_snapshot_fixture(spark, sf_dir, "elspark_ingestnd")
     assert table.latest_version() == 2
@@ -803,7 +781,6 @@ def dedup_incremental_batch(spark, sf_dir):
         threshold=(_IB_NUM, _IB_DEN),
         bands=_IB_BANDS,
         rows_per_band=_IB_ROWS,
-        hash_fn=md5_family,
     )
     return _ib_ledger(batch, matches)
 
@@ -858,7 +835,6 @@ def dedup_incremental_indexed(spark, sf_dir):
     split at multiplied corpus sizes."""
     from eviction_lab_etl_spark.functions.minhash import (
         corpus_minhash_index,
-        md5_family,
         minhash_batch_matches,
     )
 
@@ -869,8 +845,7 @@ def dedup_incremental_indexed(spark, sf_dir):
 
     # Commit-time: build and persist the index off the v1 corpus.
     cb, csz = corpus_minhash_index(
-        _ib_tokens(old), bands=_IB_BANDS, rows_per_band=_IB_ROWS,
-        hash_fn=md5_family,
+        _ib_tokens(old), bands=_IB_BANDS, rows_per_band=_IB_ROWS
     )
     idx_root = os.path.join(table.root, "minhash_index_v1")
     cb.write.mode("overwrite").parquet(os.path.join(idx_root, "buckets"))
@@ -888,7 +863,6 @@ def dedup_incremental_indexed(spark, sf_dir):
         threshold=(_IB_NUM, _IB_DEN),
         bands=_IB_BANDS,
         rows_per_band=_IB_ROWS,
-        hash_fn=md5_family,
         corpus_index=index,
     )
     return _ib_ledger(batch, matches)

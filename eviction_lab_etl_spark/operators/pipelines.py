@@ -255,10 +255,10 @@ def pipeline_validate(spark, sf_dir):
 def pipeline_corpus_manifest(spark, sf_dir):
     """The hash-checkable core of the corpus-clean flow: exact dedup
     (md5 keep-first) → quality gate, i.e. pipeline_corpus_clean minus the
-    MinHash-LSH stage (xxhash64 has no DuckDB equivalent, so the LSH stage
-    is rows-only by design). This query value-checks the manifest columns
-    and the two deterministic stages end to end; the full pipeline's extra
-    drop set is exactly the LSH near-dup stage."""
+    MinHash-LSH stage. This query value-checks the manifest columns and the
+    two deterministic stages end to end; the full pipeline's extra drop set
+    is exactly the LSH near-dup stage, which `pipeline_corpus_clean`'s own
+    oracle rebuilds."""
     docs = load(spark, sf_dir, "documents")
     # keep-first as a window over the digest, not groupBy+self-join: ONE scan
     # of documents and ONE exchange (on h) instead of two scans plus the
@@ -286,15 +286,16 @@ _CLEAN_ORACLE = None  # assigned below — needs extensions' MinHash CTE pieces
 
 
 def _clean_oracle() -> str:
-    """Full-pipeline oracle: exact keep-first dedup -> md5-family MinHash
+    """Full-pipeline oracle: exact keep-first dedup -> MinHash
     banding (the dedup_minhash_pairs CTE pieces, rebuilt over the SURVIVOR
     token set) -> exact >=0.6 verification -> drop higher ids -> quality
     gate. Rebuilding signatures in SQL is exactly what upgraded
     dedup_minhash_pairs from rows-only in r6; this applies the same move to
-    the composed pipeline (its old rows-only tag predated md5_family)."""
+    the composed pipeline (its old rows-only tag predated the shared
+    cross-engine hash family)."""
     from eviction_lab_etl_spark.operators.extensions import (
         _MH_BAND_EQ,
-        _MH_SIG_COLS,
+        _mh_sig_duck,
     )
 
     return f"""
@@ -315,11 +316,7 @@ def _clean_oracle() -> str:
         SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
         FROM surv
     ),
-    sig AS (
-        SELECT doc_id,
-               {_MH_SIG_COLS}
-        FROM tok GROUP BY doc_id
-    ),
+    sig AS ({_mh_sig_duck("tok")}),
     cand AS (
         SELECT a.doc_id AS a, b.doc_id AS b
         FROM sig a JOIN sig b ON a.doc_id < b.doc_id
@@ -356,10 +353,10 @@ def pipeline_corpus_clean(spark, sf_dir):
     (≥20 tokens, type/token ratio ≥ 0.3). Emits one row per surviving doc
     with the applied decisions — the manifest a curation run ships.
 
-    Fully deterministic (seeded md5-prefix hash family — the SAME family
-    `dedup_minhash_pairs` driver-verifies, so the ORACLE rebuilds the
-    banding and this query is hash-checked end to end; its pre-r7
-    rows-only tag predated md5_family; thresholds are integer rationals),
+    Fully deterministic (the fixed MinHash family of functions/minhash.py —
+    the SAME family `dedup_minhash_pairs` is oracle-checked with, so the ORACLE
+    rebuilds the banding and this query is hash-checked end to end;
+    thresholds are integer rationals),
     so the manifest is reproducible run to run. Banding is the
     driver-verified 16x3 configuration. Each
     stage is a shuffle on digest / band-bucket / doc_id — no O(n²) stage
@@ -389,10 +386,7 @@ def pipeline_corpus_clean(spark, sf_dir):
     exactly as long as the one consumer the driver holds, never the
     session (tests/test_plans.py::test_corpus_clean_cache_pin_is_bounded).
     """
-    from eviction_lab_etl_spark.functions.minhash import (
-        md5_family as _mh_md5_family,
-        minhash_near_dup_pairs,
-    )
+    from eviction_lab_etl_spark.functions.minhash import minhash_near_dup_pairs
 
     docs = load(spark, sf_dir, "documents")
 
@@ -423,7 +417,6 @@ def pipeline_corpus_clean(spark, sf_dir):
         threshold=(6, 10),
         bands=16,
         rows_per_band=3,
-        hash_fn=_mh_md5_family,
     )
     drop_near = F.broadcast(
         near_pairs.select(F.col("b").alias("doc_id")).distinct()

@@ -1385,15 +1385,15 @@ _CND_PLANT_BASE = 200000  # planted near-copies: distinct from +100000 (dups)
 
 def _cnd_oracle() -> str:
     """Oracle composed at import time from the SAME banding constants the
-    Spark side uses (extensions._MH_SIG_COLS/_MH_BAND_EQ over the md5-prefix
-    family) — oracle and operator cannot drift (the cleaning._NORM_SQL rule).
-    The gram token column is aliased `w` because the shared sig SQL hashes
-    the expression `w`."""
+    Spark side uses (extensions._mh_sig_duck/_MH_BAND_EQ over the shared
+    MinHash family) — oracle and operator cannot drift (the
+    cleaning._NORM_SQL rule). The gram token column is aliased `w` because
+    the shared sig SQL hashes the expression `w`."""
     from eviction_lab_etl_spark.operators.extensions import (
         _MH_BAND_EQ,
         _MH_DEN,
         _MH_NUM,
-        _MH_SIG_COLS,
+        _mh_sig_duck,
     )
 
     return f"""
@@ -1411,16 +1411,8 @@ def _cnd_oracle() -> str:
                      unnest(range(1, greatest(len(l) - {_N - 1}, 0) + 1)) AS i
               FROM toks)
     ),
-    bsig AS (
-        SELECT doc_id,
-               {_MH_SIG_COLS}
-        FROM grams WHERE doc_id % 97 = 0 GROUP BY doc_id
-    ),
-    csig AS (
-        SELECT doc_id,
-               {_MH_SIG_COLS}
-        FROM grams WHERE doc_id % 97 <> 0 GROUP BY doc_id
-    ),
+    bsig AS ({_mh_sig_duck("grams WHERE doc_id % 97 = 0")}),
+    csig AS ({_mh_sig_duck("grams WHERE doc_id % 97 <> 0")}),
     cand AS (
         SELECT b.doc_id AS bench_id, a.doc_id AS train_id
         FROM csig a JOIN bsig b ON
@@ -1463,20 +1455,10 @@ def contam_neardup(spark, sf_dir):
     longs per doc in a single grouped aggregation — the commit-time LSH
     index a snapshot table materializes once), a map-side broadcast probe
     for candidates, and verification scoped to candidate gram sets. The
-    corpus never joins the corpus. Determinism: md5-prefix hash family, so
-    the oracle rebuilds the identical signatures, bands, candidate set, and
-    verdicts — banding false negatives included."""
-    from eviction_lab_etl_spark.operators.extensions import _mh_spark_family
-
-    return _contam_neardup_frame(spark, sf_dir, _mh_spark_family)
-
-
-def _contam_neardup_frame(spark, sf_dir, hash_fn):
-    """contam_neardup's whole flow with a pluggable signature hash family —
-    shared by the md5-prefix (oracle-checkable) and xxhash64 (production
-    wire width) registrations. Only the signature build differs; the gram
-    construction, banding parameters, and exact-Jaccard verification are
-    byte-identical."""
+    corpus never joins the corpus. Determinism: the shared MinHash family
+    (functions/minhash.py — one md5-prefix base hash per gram, then exact
+    integer permutations), so the oracle rebuilds the identical signatures,
+    bands, candidate set, and verdicts — banding false negatives included."""
     from eviction_lab_etl_spark.functions.minhash import minhash_batch_matches
     from eviction_lab_etl_spark.operators.extensions import (
         _MH_BANDS,
@@ -1520,7 +1502,6 @@ def _contam_neardup_frame(spark, sf_dir, hash_fn):
         threshold=(_MH_NUM, _MH_DEN),
         bands=_MH_BANDS,
         rows_per_band=_MH_ROWS,
-        hash_fn=hash_fn,
     )
     return res.select(
         F.col("b").alias("bench_id"),
@@ -1529,26 +1510,6 @@ def _contam_neardup_frame(spark, sf_dir, hash_fn):
         big("uni").alias("uni"),
         big("near").alias("near"),
     )
-
-
-@query("contam_neardup_xx")  # rows-only: xxhash64 exists only in Spark
-def contam_neardup_xx(spark, sf_dir):
-    """contam_neardup at PRODUCTION wire width: the same whole-document
-    near-dup decontamination flow with the signature hash family swapped to
-    seeded ``xxhash64`` — the knob the md5 registration's docstring prices
-    (the md5-prefix family is ~4× wider on the wire and its hex parse IS
-    contam_neardup's dominant cost; r12 bench pinned the md5 signature
-    build at 15.4 s of the 15.4 s total). DuckDB cannot evaluate xxhash64,
-    so this row is rows-only by design; its semantics are pinned instead by
-    tests/test_library.py: (1) planted-recall 100% — every benchmark doc's
-    planted near-copy (J≈0.98) is caught and verdicted near=1, and (2)
-    verdict agreement with the md5 registration on every candidate pair
-    both bandings emit (exact Jaccard is family-independent; only the
-    banding's false-negative set may differ). SCALE.md records the measured
-    md5-vs-xxhash64 signature-build delta."""
-    from eviction_lab_etl_spark.functions.minhash import xxhash_family
-
-    return _contam_neardup_frame(spark, sf_dir, xxhash_family)
 
 
 # --- trained quality classifier (the fastText/CCNet filter's role) -----------

@@ -40,18 +40,25 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     configure(spark)  # defensive: driver-provided sessions may lack our confs
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
-        # Adaptive per testdata vintage — every vintage normalizes to the
-        # same session-tz (UTC) TimestampType the query surface was built on:
-        #  - TIMESTAMP(NANOS) parquet + nanosAsLong → bigint nanos → rebuild
-        #    µs with INTEGER division (floats corrupt the last µs digit);
-        #  - TIMESTAMP(MICROS) parquet (driver testdata since round 4) →
-        #    TimestampNTZ → cast to TimestampType; configure() pins the
-        #    session timezone to UTC so the cast is a lossless relabel.
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = normalize_events_ts(df)
+    return df
+
+
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """The ``events.ts`` recipe, for batch and streaming reads alike.
+
+    Adaptive per testdata vintage — every vintage normalizes to the same
+    session-tz (UTC) TimestampType the query surface was built on:
+     - TIMESTAMP(NANOS) parquet + nanosAsLong → bigint nanos → rebuild µs
+       with INTEGER division (floats corrupt the last µs digit);
+     - TIMESTAMP(MICROS) parquet (the testdata since round 4) →
+       TimestampNTZ → cast to TimestampType; configure() pins the session
+       timezone to UTC so the cast is a lossless relabel."""
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

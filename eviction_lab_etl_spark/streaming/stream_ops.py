@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eviction_lab_etl_spark.registry import query
-from eviction_lab_etl_spark.sources.loader import load
+from eviction_lab_etl_spark.sources.loader import load, normalize_events_ts
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -34,14 +34,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
-    # Same vintage normalization as sources.loader.load: bigint nanos (legacy
-    # nanosAsLong) or TimestampNTZ (µs testdata) → session-UTC TimestampType.
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return normalize_events_ts(stream)
 
 
 def _scratch(name: str) -> str:

@@ -98,7 +98,7 @@ EXTENSIONS = {
     "scalar_url_parts", "pipeline_web_ingest", "stream_tumbling_topk",
     "io_parquet_bloom_roundtrip", "mix_epoch_plan", "events_top_paths",
     "incr_snapshot_tag_read", "geo_knn_grid", "geo_point_in_polygon",
-    "contam_neardup_xx", "geo_simplify_sweep", "geo_geojson_parse",
+    "geo_simplify_sweep", "geo_geojson_parse",
     "text_gopher_rules", "text_boilerplate_strip", "geo_point_in_polygon_holes", "geo_area_holed", "pipeline_decontaminate", "geo_centroid_holed", "geo_multipolygon_parts", "geo_point_in_multipolygon",
     "stream_sliding_distinct", "multimodal_video_keyframes",
     "search_matryoshka_topk", "search_matryoshka_recall",
@@ -134,9 +134,9 @@ EXTENSIONS = {
     "stream_static_enrich", "udtf_dynamic_schema", "join_scd2_point_in_time",
     "sample_weighted_priority", "sim_cross_lang_pairs",
     "events_pareto_concentration", "udf_cogrouped_map", "agg_percentiles_by_lang",
-    # Round-14: PII scrub, production-width MinHash companion, and the
-    # geometry capstone/spatial-join/tiling/crosswalk batch.
-    "text_pii_scrub", "dedup_minhash_pairs_xx", "geo_search_index",
+    # Round-14: PII scrub and the geometry
+    # capstone/spatial-join/tiling/crosswalk batch.
+    "text_pii_scrub", "geo_search_index",
     "geo_bbox_overlap_pairs", "geo_tile_cover", "geo_crosswalk_alloc",
     "events_attribution_linear", "profile_column_stats",
     # Round-15: the tile-join capstone, crosswalk end-to-end, and the

@@ -96,26 +96,29 @@ def test_jaccard_prefix_filter_equals_naive(spark, sf_dir):
 def test_jaccard_prefix_actually_prunes(spark, sf_dir):
     """The prefix index must be strictly smaller than the full token index —
     otherwise the 'optimization' indexes everything."""
-    from eviction_lab_etl_spark.functions.similarity import jaccard_pairs_prefix  # noqa: F401
+    from eviction_lab_etl_spark.functions.similarity import _rarity_prefix
     from eviction_lab_etl_spark.sources.loader import load
-    from pyspark.sql import Window
 
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     tok = docs.select(
         F.col("doc_id").alias("id"),
         F.explode(F.array_distinct(F.split("text", " "))).alias("w"),
     )
-    sizes = tok.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-    rarity = Window.partitionBy("id").orderBy("freq", "w")
-    prefix_rows = (
-        tok.join(freq, "w")
-        .withColumn("rnk", F.row_number().over(rarity))
-        .join(sizes, "id")
-        .filter(F.col("rnk") <= F.col("n") - F.expr("((6 * n + 9) div 10)") + 1)
-        .count()
-    )
+    prefix_rows = _rarity_prefix(tok, (6, 10)).count()
     assert prefix_rows < tok.count() * 0.6
+
+
+def test_jaccard_prefix_rejects_threshold_above_one(spark):
+    """A threshold above 1 can never match, and the group expansion would
+    emit J = 1 pairs regardless: a real error, not an ``assert`` that
+    ``python -O`` strips."""
+    import pytest
+
+    from eviction_lab_etl_spark.functions.similarity import jaccard_pairs_prefix
+
+    tok = spark.createDataFrame([(1, "a"), (2, "a")], "doc_id long, w string")
+    with pytest.raises(ValueError, match="11/10"):
+        jaccard_pairs_prefix(tok, threshold=(11, 10))
 
 
 def _doc_tokens(spark, sf_dir):
@@ -169,6 +172,122 @@ def test_minhash_banding_prunes_far_pairs(spark):
     assert dup_pairs <= cand  # identical docs always collide
     false_candidates = cand - dup_pairs
     assert len(false_candidates) <= 20, f"banding passed {len(false_candidates)} far pairs"
+
+
+def test_pins_bookkeeping_never_resolves_columns(spark, monkeypatch):
+    """Pin bookkeeping lives in a weak-keyed registry, not on the frame:
+    pinning, adopting from pinned AND unpinned parents, and the release on
+    GC all run without a single attribute miss on a DataFrame (a miss goes
+    through ``__getattr__``, which resolves the name as a column)."""
+    import gc
+
+    from eviction_lab_etl_spark.functions.pins import adopt_pins, pin_to
+
+    inner = spark.range(10).select((F.col("id") * 2).alias("x"))
+    unpinned = spark.range(4)
+    frame_cls = type(inner)
+
+    def no_column_lookup(self, name):
+        raise AssertionError(f"attribute miss resolved as column: {name}")
+
+    monkeypatch.setattr(frame_cls, "__getattr__", no_column_lookup)
+    lib_result = pin_to(spark.range(3), inner)
+    out = adopt_pins(lib_result.select("id"), lib_result, unpinned)
+    monkeypatch.undo()
+    assert inner.is_cached
+    del lib_result
+    gc.collect()
+    assert inner.is_cached  # the pins moved to `out`
+    del out
+    gc.collect()
+    assert not inner.is_cached
+
+
+def test_adopt_pins_twice_raises(spark):
+    """A parent's pins can be adopted once: a second adoption would hand the
+    second child no cache at all, so it raises instead of degrading to a
+    silent recompute."""
+    import pytest
+
+    from eviction_lab_etl_spark.functions.pins import adopt_pins, pin_to
+
+    inner = spark.range(10).select((F.col("id") * 2).alias("x"))
+    parent = pin_to(spark.range(3), inner)
+    first = adopt_pins(parent.select("id"), parent)
+    with pytest.raises(ValueError, match="already adopted"):
+        adopt_pins(parent.select("id"), parent)
+    assert inner.is_cached
+    del first
+
+
+def test_minhash_family_spark_duck_identical(spark):
+    """The one MinHash family is cross-engine: Spark's
+    ``minhash_signatures`` and DuckDB's ``minhash_sig_duck`` give identical
+    signatures, slot for slot, on adversarial tokens — the empty string,
+    non-ASCII text, a quote, and tokens whose md5 prefix starts with 'f'
+    (the top of the 60-bit hex parse) — both one token per doc and all of
+    them in one doc (the min across tokens)."""
+    import hashlib
+
+    import duckdb
+
+    from eviction_lab_etl_spark.functions.minhash import (
+        minhash_sig_duck,
+        minhash_signatures,
+    )
+
+    f_tokens = [
+        w for w in (f"f{k}" for k in range(200))
+        if hashlib.md5(f"0|{w}".encode()).hexdigest().startswith("f")
+    ][:3]
+    assert len(f_tokens) == 3
+    words = ["", "ü", "日本語 テキスト", "it's", "\u00a0", "😀"] + f_tokens
+    rows = [(i, w) for i, w in enumerate(words)]
+    rows += [(100, w) for w in words]
+    n = 48
+    got = {
+        r.id: list(r.sig)
+        for r in minhash_signatures(
+            spark.createDataFrame(rows, "id long, w string"), n_hashes=n
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE tk (doc_id BIGINT, w VARCHAR)")
+    con.executemany("INSERT INTO tk VALUES (?, ?)", rows)
+    want = {
+        r[0]: list(r[1:]) for r in con.execute(minhash_sig_duck(n, "tk")).fetchall()
+    }
+    con.close()
+    assert got == want
+    assert len(got) == len(words) + 1
+
+
+def test_minhash_permutations_stay_exact_bigint():
+    """Every slot permutation (a·x + b) mod p is exact BIGINT arithmetic in
+    both engines: the largest a_i·x + b_i over the 2^28 base range is
+    below 2^63, and the constants are valid, distinct permutations."""
+    from eviction_lab_etl_spark.functions.minhash import (
+        MINHASH_PRIME,
+        MINHASH_X_MOD,
+        minhash_perm,
+    )
+
+    perms = [minhash_perm(i) for i in range(128)]
+    assert all(1 <= a < MINHASH_PRIME and 0 <= b < MINHASH_PRIME for a, b in perms)
+    assert len({a for a, _ in perms}) == len(perms)
+    assert max(a * (MINHASH_X_MOD - 1) + b for a, b in perms) < 1 << 63
+
+
+def test_dedup_minhash_recall_floor(spark, sf_dir):
+    """The registered 16×3 banding keeps its theoretical recall on the
+    fixture: recall_pm >= 979, i.e. P[candidate | s = 0.6] = 1 − (1 −
+    0.6³)¹⁶ ≈ 0.979 at the threshold itself (pairs above it collide more
+    often)."""
+    from eviction_lab_etl_spark.registry import QUERIES
+
+    row = QUERIES["dedup_minhash_recall"](spark, sf_dir).collect()[0]
+    assert row.n_exact > 0
+    assert row.recall_pm >= 979, row
 
 
 def test_srp_banded_neardup_subset_and_recall(spark, sf_dir):
@@ -1037,10 +1156,7 @@ def test_minhash_batch_matches_constructed_example(spark):
     """Asymmetric banding on a constructed corpus: an exact copy and a
     one-token superset both match (Jaccard 1.0 and n/(n+1)); a disjoint doc
     yields no candidate at all."""
-    from eviction_lab_etl_spark.functions.minhash import (
-        md5_family,
-        minhash_batch_matches,
-    )
+    from eviction_lab_etl_spark.functions.minhash import minhash_batch_matches
 
     corpus_words = [f"w{i}" for i in range(30)]
     corpus = spark.createDataFrame(
@@ -1055,8 +1171,7 @@ def test_minhash_batch_matches_constructed_example(spark):
     out = {
         (r.b, r.a): (r.inter, r.uni, r.near)
         for r in minhash_batch_matches(
-            batch, corpus, threshold=(9, 10), bands=16, rows_per_band=3,
-            hash_fn=md5_family,
+            batch, corpus, threshold=(9, 10), bands=16, rows_per_band=3
         ).collect()
     }
     assert out[(101, 1)] == (30, 30, 1)
@@ -1207,7 +1322,6 @@ def test_minhash_batch_matches_with_prebuilt_index_identical(spark):
     store the index at commit time without changing any admission verdict."""
     from eviction_lab_etl_spark.functions.minhash import (
         corpus_minhash_index,
-        md5_family,
         minhash_batch_matches,
     )
 
@@ -1222,12 +1336,11 @@ def test_minhash_batch_matches_with_prebuilt_index_identical(spark):
         + [(102, w) for w in ["y1", "y2", "y3"]],
         "id long, w string",
     )
-    kw = dict(threshold=(9, 10), bands=16, rows_per_band=3, hash_fn=md5_family)
+    kw = dict(threshold=(9, 10), bands=16, rows_per_band=3)
     inline = sorted(
         map(tuple, minhash_batch_matches(batch, corpus, **kw).collect())
     )
-    idx = corpus_minhash_index(corpus, bands=16, rows_per_band=3,
-                               hash_fn=md5_family)
+    idx = corpus_minhash_index(corpus, bands=16, rows_per_band=3)
     indexed = sorted(
         map(
             tuple,
@@ -1570,37 +1683,6 @@ def test_matryoshka_recall_floor(spark, sf_dir):
     row = QUERIES["search_matryoshka_recall"](spark, sf_dir).collect()[0]
     assert row.n_exact == 10
     assert row.n_hits >= 9
-
-
-def test_contam_neardup_xx_recall_and_family_agreement(spark, sf_dir):
-    """The xxhash64 (production wire-width) registration of whole-document
-    decontamination: (1) planted recall — every benchmark doc's planted
-    near-copy (id + 200000, J≈0.98) is caught by the xx banding and
-    verdicted near=1, exactly as the md5 registration catches it; (2)
-    family independence of the VERDICT — for every candidate pair both
-    bandings emit, (inter, uni, near) agree exactly (exact Jaccard does not
-    depend on the signature family; only the banding miss set may differ)."""
-    from eviction_lab_etl_spark.operators.training import _CND_PLANT_BASE
-    from eviction_lab_etl_spark.registry import QUERIES
-
-    xx = {
-        (r.bench_id, r.train_id): (r.inter, r.uni, r.near)
-        for r in QUERIES["contam_neardup_xx"](spark, sf_dir).collect()
-    }
-    md5 = {
-        (r.bench_id, r.train_id): (r.inter, r.uni, r.near)
-        for r in QUERIES["contam_neardup"](spark, sf_dir).collect()
-    }
-    planted = {
-        (b, b + _CND_PLANT_BASE) for b, _ in md5 if (b, b + _CND_PLANT_BASE) in md5
-    }
-    assert planted  # the fixture plants one near-copy per benchmark doc
-    for pair in planted:
-        assert pair in xx and xx[pair][2] == 1, pair  # 100% planted recall
-    both = set(xx) & set(md5)
-    assert both
-    for pair in both:
-        assert xx[pair] == md5[pair], pair
 
 
 def test_geo_simplify_sweep_ring_bounds_and_validity(spark, sf_dir):
@@ -1972,42 +2054,6 @@ def test_pii_scrub_grammar_cross_engine(spark):
             },
         ).fetchone()
         assert tuple(duck) == (masked, ne, ni, np_), (raw, duck)
-
-
-def test_dedup_minhash_xx_family_agreement(spark, sf_dir):
-    """The xxhash64 (production wire-width) registration of the symmetric
-    MinHash path: (1) family independence of the VERIFICATION — for every
-    pair both bandings emit, (inter, uni) agree exactly (exact Jaccard does
-    not depend on the signature family); (2) both bandings' outputs are
-    subsets of the exact >=0.6 pair set (each emitted pair passes the
-    cross-multiplied threshold by construction); (3) the two bandings'
-    pair counts agree within 1% (b=16, r=3 gives P[candidate | s=0.6]
-    ~ 0.979 for EITHER family; the ~2% expected miss mass lands on
-    different pairs per family — measured 57 of ~73k pairs apart on the
-    sf0.001 fixture — but the RATE is family-independent)."""
-    from eviction_lab_etl_spark.operators.extensions import _MH_DEN, _MH_NUM
-    from eviction_lab_etl_spark.registry import QUERIES
-
-    xx = {
-        (r.a, r.b): (r.inter, r.uni)
-        for r in QUERIES["dedup_minhash_pairs_xx"](spark, sf_dir).collect()
-    }
-    md5 = {
-        (r.a, r.b): (r.inter, r.uni)
-        for r in QUERIES["dedup_minhash_pairs"](spark, sf_dir).collect()
-    }
-    assert xx and md5
-    both = set(xx) & set(md5)
-    assert both
-    for pair in both:
-        assert xx[pair] == md5[pair], pair
-    for pairs in (xx, md5):
-        for (a, b), (inter, uni) in pairs.items():
-            assert a < b and _MH_DEN * inter >= _MH_NUM * uni, (a, b)
-    assert abs(len(xx) - len(md5)) <= 0.01 * max(len(xx), len(md5)), (
-        len(xx),
-        len(md5),
-    )
 
 
 def test_bbox_overlap_reference_point_exactly_once(spark, sf_dir):

@@ -456,19 +456,23 @@ def test_prefix_jaccard_equals_python_bruteforce(spark, docs, thr):
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_minhash_banding_equals_python_bruteforce(spark, docs, thr):
-    """The md5-family MinHash-LSH join (the ``dedup_minhash_pairs`` engine)
-    against a pure-Python reproduction — an oracle independent of BOTH Spark
-    and DuckDB. The Python side rebuilds the seeded md5-prefix hashes with
-    hashlib, takes per-band slice tuples, and enumerates candidates by
-    band-tuple equality over all pairs; output must match EXACTLY —
-    including banding false negatives, which is the whole contract. Pins
-    the '{seed}|{token}' framing, the 15-hex-char conv parse, the 1-based
-    element_at slice indexing, and the verify threshold in one assert."""
+    """The MinHash-LSH join (the ``dedup_minhash_pairs`` engine) against a
+    pure-Python reproduction — an oracle independent of BOTH Spark and
+    DuckDB. The Python side rebuilds each token's md5-prefix base hash with
+    hashlib, applies the slot permutations (a·x + b) mod p, takes per-band
+    slice tuples, and enumerates candidates by band-tuple equality over all
+    pairs; output must match EXACTLY — including banding false negatives,
+    which is the whole contract. Pins the '0|{token}' framing, the
+    15-hex-char conv parse, the 2^28 base reduction, the permutation
+    constants, the 1-based element_at slice indexing, and the verify
+    threshold in one assert."""
     import hashlib
 
     from eviction_lab_etl_spark.functions.minhash import (
-        md5_family,
+        MINHASH_PRIME,
+        MINHASH_X_MOD,
         minhash_near_dup_pairs,
+        minhash_perm,
     )
 
     bands, rpb = 4, 2
@@ -478,16 +482,18 @@ def test_minhash_banding_equals_python_bruteforce(spark, docs, thr):
         (r.a, r.b, r.inter, r.uni)
         for r in minhash_near_dup_pairs(
             tokens, "doc_id", "w", threshold=thr,
-            bands=bands, rows_per_band=rpb, hash_fn=md5_family,
+            bands=bands, rows_per_band=rpb,
         ).collect()
     }
 
-    def h60(seed: int, w: str) -> int:
-        return int(hashlib.md5(f"{seed}|{w}".encode()).hexdigest()[:15], 16)
+    def h(i: int, w: str) -> int:
+        x = int(hashlib.md5(f"0|{w}".encode()).hexdigest()[:15], 16)
+        a, b = minhash_perm(i)
+        return (a * (x % MINHASH_X_MOD) + b) % MINHASH_PRIME
 
     sets = [{f"t{t}" for t in toks} for toks in docs]
     sigs = [
-        [min(h60(i, w) for w in s) for i in range(bands * rpb)] for s in sets
+        [min(h(i, w) for w in s) for i in range(bands * rpb)] for s in sets
     ]
     num, den = thr
     want = set()

@@ -332,7 +332,7 @@ STRESS = [
     # inherently costs). geo_bbox_overlap_pairs / geo_tile_cover /
     # geo_crosswalk_alloc are deliberately ABSENT: nation-only inputs (the
     # geo_simplify_sweep rule — timing a 25-row constant).
-    # dedup_minhash_pairs_xx is ABSENT for the verbatim-copy rule
+    # dedup_minhash_pairs is ABSENT for the verbatim-copy rule
     # (text_dup_span_coverage precedent): every multiplied doc gains mult-1
     # exact copies, all J=1 banding matches, so the sweep would time the
     # output artifact (quadratic true-pair mass), not the banding.
@@ -687,8 +687,8 @@ def measure_minhash_stress(spark, mult: int) -> dict:
     Corpus: groups of 5 consecutive doc_ids share 17 group-private tokens;
     each doc adds 1 doc-private token and 2 tokens from a 31-token common
     vocabulary (rotating by group). Within-group Jaccard = 19/21 ≈ 0.905;
-    cross-group (same rotation) ≈ 2/38 ≈ 0.053. Banding uses the PRODUCTION
-    xxhash64 family at b=16, r=6 (96 hashes) — steep enough that the 0.05
+    cross-group (same rotation) ≈ 2/38 ≈ 0.053. Banding uses the engine's one
+    MinHash family at b=16, r=6 (96 hashes) — steep enough that the 0.05
     background is pruned to ~0 while P[miss | s=0.905] = (1−0.905⁶)¹⁶ ≈
     3·10⁻⁶. Reports the naive all-token candidate mass, the banded candidate
     count, result pairs vs the 2n expected within-group pairs (recall), and
