@@ -110,24 +110,23 @@ def minhash_signatures(
     )
 
 
-def minhash_sig_duck(
-    n_hashes: int, from_sql: str, token_sql: str = "w", id_sql: str = "doc_id"
-) -> str:
+def minhash_sig_duck(n_hashes: int, from_sql: str) -> str:
     """DuckDB-SQL spelling of ``minhash_signatures``: a SELECT over
-    ``FROM {from_sql}`` (a relation, optionally with a WHERE clause)
-    yielding ``id_sql, h0 … h{n_hashes-1}`` — the same values as the Spark
-    signature array, slot for slot. The base hash is computed once per row
-    in a subquery, exactly like the Spark projection."""
+    ``FROM {from_sql}`` (a relation with columns ``doc_id`` and ``w``,
+    optionally with a WHERE clause) yielding ``doc_id, h0 … h{n_hashes-1}``
+    — the same values as the Spark signature array, slot for slot. The base
+    hash is computed once per row in a subquery, exactly like the Spark
+    projection."""
     hs = ",\n               ".join(
         f"min(({a} * x + {b}) % {MINHASH_PRIME}) AS h{i}"
         for i, (a, b) in enumerate(map(minhash_perm, range(n_hashes)))
     )
     return (
-        f"SELECT {id_sql},\n               {hs}\n"
-        f"        FROM (SELECT {id_sql}, "
-        f"{md5_family_duck(0, token_sql)} % {MINHASH_X_MOD} AS x "
+        f"SELECT doc_id,\n               {hs}\n"
+        f"        FROM (SELECT doc_id, "
+        f"{md5_family_duck(0, 'w')} % {MINHASH_X_MOD} AS x "
         f"FROM {from_sql})\n"
-        f"        GROUP BY {id_sql}"
+        f"        GROUP BY doc_id"
     )
 
 

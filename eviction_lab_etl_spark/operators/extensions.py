@@ -714,18 +714,13 @@ _MH_NUM, _MH_DEN = 3, 5  # Jaccard ≥ 0.6, integer cross-multiplied (§2.0 rule
 _MH_BAND_EQ = minhash_band_eq_duck(_MH_BANDS, _MH_ROWS)
 
 
-def _mh_sig_duck(from_sql: str) -> str:
-    """The oracles' signature CTE body at the registered 16×3 banding."""
-    return minhash_sig_duck(_MH_BANDS * _MH_ROWS, from_sql)
-
-
 # Shared oracle CTEs: signatures → banded candidates → exact-verified pairs.
 _MH_ORACLE_CTES = f"""
     WITH tok AS (
         SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
         FROM documents
     ),
-    sig AS ({_mh_sig_duck("tok")}),
+    sig AS ({minhash_sig_duck(_MH_BANDS * _MH_ROWS, "tok")}),
     cand AS (
         SELECT a.doc_id AS a, b.doc_id AS b
         FROM sig a JOIN sig b ON a.doc_id < b.doc_id

@@ -293,9 +293,11 @@ def _clean_oracle() -> str:
     dedup_minhash_pairs from rows-only in r6; this applies the same move to
     the composed pipeline (its old rows-only tag predated the shared
     cross-engine hash family)."""
+    from eviction_lab_etl_spark.functions.minhash import minhash_sig_duck
     from eviction_lab_etl_spark.operators.extensions import (
         _MH_BAND_EQ,
-        _mh_sig_duck,
+        _MH_BANDS,
+        _MH_ROWS,
     )
 
     return f"""
@@ -316,7 +318,7 @@ def _clean_oracle() -> str:
         SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
         FROM surv
     ),
-    sig AS ({_mh_sig_duck("tok")}),
+    sig AS ({minhash_sig_duck(_MH_BANDS * _MH_ROWS, "tok")}),
     cand AS (
         SELECT a.doc_id AS a, b.doc_id AS b
         FROM sig a JOIN sig b ON a.doc_id < b.doc_id

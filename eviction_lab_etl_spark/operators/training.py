@@ -1385,16 +1385,20 @@ _CND_PLANT_BASE = 200000  # planted near-copies: distinct from +100000 (dups)
 
 def _cnd_oracle() -> str:
     """Oracle composed at import time from the SAME banding constants the
-    Spark side uses (extensions._mh_sig_duck/_MH_BAND_EQ over the shared
-    MinHash family) — oracle and operator cannot drift (the
-    cleaning._NORM_SQL rule). The gram token column is aliased `w` because
-    the shared sig SQL hashes the expression `w`."""
+    Spark side uses (minhash_sig_duck/_MH_BAND_EQ at extensions' 16×3
+    banding, over the shared MinHash family) — oracle and operator cannot
+    drift (the cleaning._NORM_SQL rule). The gram token column is aliased
+    `w` because the shared sig SQL hashes the column `w`."""
+    from eviction_lab_etl_spark.functions.minhash import minhash_sig_duck
     from eviction_lab_etl_spark.operators.extensions import (
         _MH_BAND_EQ,
+        _MH_BANDS,
         _MH_DEN,
         _MH_NUM,
-        _mh_sig_duck,
+        _MH_ROWS,
     )
+
+    n = _MH_BANDS * _MH_ROWS
 
     return f"""
     WITH corpus AS (
@@ -1411,8 +1415,8 @@ def _cnd_oracle() -> str:
                      unnest(range(1, greatest(len(l) - {_N - 1}, 0) + 1)) AS i
               FROM toks)
     ),
-    bsig AS ({_mh_sig_duck("grams WHERE doc_id % 97 = 0")}),
-    csig AS ({_mh_sig_duck("grams WHERE doc_id % 97 <> 0")}),
+    bsig AS ({minhash_sig_duck(n, "grams WHERE doc_id % 97 = 0")}),
+    csig AS ({minhash_sig_duck(n, "grams WHERE doc_id % 97 <> 0")}),
     cand AS (
         SELECT b.doc_id AS bench_id, a.doc_id AS train_id
         FROM csig a JOIN bsig b ON
