@@ -32,6 +32,11 @@ the per-query growth ratio is a host-noise-free scaling slope taken within
 one run (10x sf0.1 = sf1-equivalent row counts). collect() is not used for
 the pair because 10x map-only outputs would measure driver deserialization.
 Disable with SPARK_GRAFT_TWO_POINT=0; multiplier via SPARK_GRAFT_SCALE_MULT.
+
+This module is also the one home of the bench's tracked table (TRACKED),
+regression bases (BASELINE_SEC, TPCH_BASE_SEC), session recipe
+(env_session) and timing call (time_once); the tools/ A/B and sweep scripts
+import them instead of keeping copies.
 """
 
 from __future__ import annotations
@@ -51,202 +56,138 @@ if REPO_DIR not in sys.path:
 from eviction_lab_etl_spark import registry
 from eviction_lab_etl_spark.session import build_session
 
-# The seven BASELINE.md headline operators (SURVEY §6). "value" sums exactly
-# these, so the total stays comparable to BASELINE.md and to prior rounds.
-HEADLINE = [
-    "agg_sum_groupby",
-    "join_broadcast_dims",
-    "window_rank_topk",
-    "reshape_pivot_wide",
-    "stream_session",
-    "text_tokenize_topn",
-    "sim_knn_cosine",
+# The tracked set, in measurement order: (name, group, why). "headline" is
+# the seven BASELINE.md operators (SURVEY §6); "value" sums exactly these, so
+# the total stays comparable to BASELINE.md and to prior rounds. Every other
+# group is timed and reported in "queries" for round-over-round tracking but
+# NOT folded into "value" (BASELINE.md has no counterpart numbers for them):
+# "llm" is the LLM-data-pipeline family, "rNN" the round that first pinned a
+# row. A row's first median becomes its regression base for later rounds, as
+# the llm four were seeded from r03. The table order is the warm-up order and
+# the input of the seeded shuffle, so appending a row changes neither for the
+# rows before it.
+#
+# Deliberately untracked, per the standing rules:
+# - a query whose wall is its fixture's snapshot commits or parquet writes
+#   (dedup_incremental_batch / _indexed, incr_compact_roundtrip,
+#   incr_snapshot_tag_read, io_parquet_bloom_roundtrip); a warm median would
+#   time the fixture, and tools/scale_stress.py --incremental measures the
+#   operator's real claim;
+# - map-only scan riders that are the projection inside a tracked query
+#   (web_url_canonicalize, scalar_url_parts, text_gopher_rules,
+#   geo_geojson_parse) and fixture-constant universes (sim_containment_pairs,
+#   graph_bfs_layers, geo_simplify_sweep);
+# - a query that shares a tracked query's frame and adds only K-row or
+#   group-frame work (join_fuzzy_blocked, search_sq8_rerank_recall,
+#   search_rp_recall, search_matryoshka_recall, mix_budget_alloc,
+#   mix_epoch_plan, agg_median_countframe);
+# - wide-output queries (dedup_minhash_pairs, sim_jaccard_prefix): collect()
+#   of millions of rows times driver deserialization, not the computation;
+#   their evidence lives in the noop-sink sweeps and plans/r15/.
+TRACKED: list[tuple[str, str, str]] = [
+    ("agg_sum_groupby", "headline", "TPC-H Q1-style grouped sums"),
+    ("join_broadcast_dims", "headline", "two broadcast dimension joins"),
+    ("window_rank_topk", "headline", "pre-aggregated per-nation top-3 window"),
+    ("reshape_pivot_wide", "headline", "long-to-wide zero-filled pivot"),
+    ("stream_session", "headline", "gap-based sessionization"),
+    ("text_tokenize_topn", "headline", "explode, count, ordered top-k"),
+    ("sim_knn_cosine", "headline", "brute-force cosine top-k"),
+    ("dedup_simhash_pairs", "llm", "banded SimHash near-dup pairs"),
+    ("pipeline_corpus_manifest", "llm", "exact dedup then quality gate"),
+    ("contam_ngram_overlap", "llm",
+     "full-corpus scan (no doc_id bound): the training-assembly family's scale signal"),
+    ("pipeline_training_set", "llm",
+     "the composed clean→dedup→gate→resample→pack flow as one plan"),
+    ("complex_market_share", "r5", "deepest dimension fan (8-table Q8)"),
+    ("complex_important_stock", "r5", "self-referencing scalar aggregate (Q11)"),
+    ("events_type_transitions", "r5", "user-keyed lag window + matrix agg"),
+    ("embed_norm_hist", "r5", "quantize-fold over the embedding column"),
+    ("incr_snapshot_time_travel", "r5", "3 ACID commits + 3 versioned reads, end-to-end"),
+    ("contam_ngram_hashed", "r6", "hashed-gram contamination knob"),
+    ("stream_session_skewsafe", "r6", "the default (two-phase) sessionize path"),
+    ("join_skew_salted", "r6", "salted fact-to-profile join (≡ plain join)"),
+    ("io_range_partitioned", "r6", "range-clustered write + pruned read-back"),
+    ("join_bloom_pruned", "r7", "bloom build + pruned fact scan + exact join"),
+    ("embed_kmeans_iter", "r7", "2 Lloyd iterations, broadcast centroids"),
+    ("text_tfidf_topterms", "r7", "tf + df + vocab-broadcast ranking"),
+    ("pipeline_entity_resolution", "r7", "block->match->CC->canonicalize end-to-end"),
+    ("events_streak_islands", "r7", "distinct + islands window + double agg"),
+    ("window_skyline_2d", "r7", "banded local sweep + global candidate sweep"),
+    ("ts_ewma_smooth", "r7", "8-lag shared-sort window, all-integer"),
+    ("search_bm25_topk", "r7", "early-filtered tf + broadcast idf + top-k"),
+    ("search_hybrid_rrf", "r7", "BM25 + cosine legs fused by integer RRF"),
+    ("search_mmr_diverse", "r7", "unrolled greedy rerank over 20 candidates"),
+    ("sim_containment_prefix", "r7", "one-sided prefix containment vs full corpus"),
+    ("incr_scd2_build", "r7", "change-log -> SCD2 interval dimension"),
+    ("ts_changepoint_shift", "r7", "daily rollup + 4 frame aggs, one sort"),
+    ("text_mix_entropy", "r7", "(source,lang) count + window + micro-floor"),
+    ("multimodal_audio_neardup", "r9", "r8: banded envelope-fp over real WAV decode"),
+    ("embed_pq_codes", "r9", "map-only PQ encoding (1-row codebook BNLJ)"),
+    ("search_pq_adc_topk", "r9", "ADC table-lookup scoring + TakeOrdered"),
+    ("dedup_semantic", "r9", "bucket-scoped cosine election, nprobe=2"),
+    ("pack_bins_nextfit", "r9", "per-shard Arrow greedy, metadata-only"),
+    ("multimodal_video_neardup", "r9", "aligned per-frame dHash quorum join"),
+    ("text_dup_span_coverage", "r9", "gram-DF shuffle + join-back coverage"),
+    ("text_lm_nll", "r9", "integer-bits bigram LM quality gate"),
+    ("text_bpe_train", "r9", "corpus word-count + 3 vocab-frame merges"),
+    ("sketch_heavy_hitters", "r9", "per-batch MG + containment verdict"),
+    ("text_bpe_encode", "r10", "broadcast word->BPE-count join"),
+    ("pack_bins_bpe", "r10", "next-fit on trained-BPE counts"),
+    ("search_ivfpq_topk", "r10", "nprobe-scoped ADC, zero shuffles"),
+    ("dedup_semantic_wide", "r10", "k=24 wide-codebook branch"),
+    ("contam_bloom_gate", "r10", "bloom-pruned decontamination"),
+    ("text_dup_span_remove", "r10", "keep-first exact-substring removal"),
+    ("sketch_countmin", "r10", "per-batch CMS grids + closed-form probe"),
+    ("search_hard_negatives", "r10", "multi-query BM25 negative mining"),
+    ("search_sq8_topk", "r11", "asymmetric SQ8 scan + TakeOrdered"),
+    ("text_normalize_unicode", "r11", "map-only CCNet-style normalize chain"),
+    ("dedup_exact_normalized", "r11", "digest shuffle over normalized text"),
+    ("text_pmi_collocations", "r11", "one gram shuffle + broadcast marginals"),
+    ("sketch_quantile_mergeable", "r11", "Arrow compactor partials + KB merge"),
+    ("search_sq8_rerank", "r12", "SQ8 coarse scan + candidate-only rerank"),
+    ("dedup_lines_global", "r12", "corpus-wide keep-first line dedup"),
+    ("sketch_theta_kmv", "r12", "bottom-K distinct sketch + set algebra"),
+    ("contam_neardup", "r12", "asymmetric MinHash decontamination"),
+    ("text_quality_classifier", "r12", "NB weight-table broadcast apply"),
+    ("ts_seasonal_profile", "r12", "(type, hour) cells + window ratios"),
+    ("search_rp_topk", "r12", "16-dim JL literal-fold scan"),
+    ("join_asof_nearest", "r12", "union-window nearest temporal match"),
+    ("sketch_kmv_partitioned", "r12", "per-source bottom-K rollup + merge"),
+    ("contam_span_remove", "r12", "broadcast bench grams, span surgery"),
+    ("prune_prototypes", "r12", "argmin assignment + mean-ratio flag"),
+    ("dedup_url_keep_first", "r12", "canonical-URL keep-first shuffle"),
+    ("web_domain_cap", "r12", "per-host head-of-sequence cap"),
+    ("ts_resample_ohlc", "r12", "hourly OHLC bars, agg-only min_by form"),
+    ("text_vocab_nucleus", "r12", "top-p vocab cut on the count frame"),
+    ("pack_interleave_sources", "r12", "two-phase skew-safe interleave rank"),
+    ("search_filtered_topk", "r12", "pushed-predicate exact retrieval"),
+    ("events_attribution_last_touch", "r12", "ignore-nulls window attribution"),
+    ("pipeline_web_ingest", "r12", "URL funnel -> normalize composition"),
+    ("stream_tumbling_topk", "r12", "windowed top-k on collapsed counts"),
+    ("events_top_paths", "r12", "3-event path mining, two shared leads"),
+    ("geo_knn_grid", "r12", "3x3-cell broadcast probe + argmin encode"),
+    ("stream_sliding_distinct", "r12", "exact distinct over sliding windows"),
+    ("multimodal_video_keyframes", "r12", "decode + digest + lag keyframe cut"),
+    ("search_matryoshka_topk", "r12", "prefix-slice scan, no transform at all"),
+    ("resample_epoch_realize", "r12", "mixture plan -> prefix realization"),
+    ("events_dau_wau", "r12", "sliding exact distinct via x7 expansion"),
+    ("geo_point_in_polygon", "r13", "zero-shuffle broadcast-grid ray cast"),
+    ("text_boilerplate_strip", "r13", "line counts + broadcast hot-set strip"),
+    ("geo_tile_join", "r15", "tile pyramid × wide attribute build"),
+    ("geo_crosswalk_apportion", "r15", "geometry→largest-remainder apportion"),
+    ("events_session_transitions", "r15", "sessions+transitions, one exchange"),
+    # r15_opt: the bounded-output members of the families the r15
+    # optimization rewrote (bitset pair verification + duplicate-group
+    # banding, OPTIMIZATION_r15.md).
+    ("dedup_minhash_recall", "r15_opt", "banding + exact PPJoin legs, 1-row out"),
+    ("search_ivfpq_recall", "r15_opt", "single-pass scoped-recall window"),
+    ("search_ivfsq_recall", "r15_opt", "same fold on the SQ8 leg"),
 ]
 
-# LLM-data-pipeline headliners (the engine's most distinctive code): timed and
-# reported in "queries" for round-over-round tracking, but NOT folded into
-# "value" — BASELINE.md has no counterpart numbers for them, so adding them to
-# the total would corrupt the baseline ratio.
-LLM_HEADLINE = [
-    "dedup_simhash_pairs",
-    "pipeline_corpus_manifest",
-    # Full-corpus scan (no doc_id bound): the training-assembly family's
-    # round-over-round scale signal.
-    "contam_ngram_overlap",
-    # The composed clean→dedup→gate→resample→pack flow as one plan.
-    "pipeline_training_set",
-]
-
-# Round-5 additions worth tracking round-over-round (reported in "queries",
-# excluded from "value" and "vs_baseline" — they have no baseline yet; their
-# first medians here become the regression base for later rounds, exactly how
-# the LLM four were seeded from r03).
-R5_HEADLINE = [
-    "complex_market_share",       # deepest dimension fan (8-table Q8)
-    "complex_important_stock",    # self-referencing scalar aggregate (Q11)
-    "events_type_transitions",    # user-keyed lag window + matrix agg
-    "embed_norm_hist",            # quantize-fold over the embedding column
-    "incr_snapshot_time_travel",  # 3 ACID commits + 3 versioned reads, end-to-end
-]
-
-# Round-6 additions (same seeding rule as R5_HEADLINE).
-R6_HEADLINE = [
-    "contam_ngram_hashed",        # hashed-gram contamination knob
-    "stream_session_skewsafe",    # the default (two-phase) sessionize path
-    "join_skew_salted",           # salted fact-to-profile join (≡ plain join)
-    "io_range_partitioned",       # range-clustered write + pruned read-back
-]
-
-# Round-7 additions (same seeding rule): the Bloom runtime-filter join,
-# exact k-means, TF-IDF, the compositions (entity resolution, hybrid RRF,
-# MMR rerank), the retrieval/series/mix batch (BM25, skyline, EWMA,
-# streaks, containment prefix, SCD2 build, changepoint, entropy).
-# Deliberately absent: incr_compact_roundtrip (wall is one sequential
-# table rewrite — an I/O protocol, not a query plan), join_fuzzy_blocked
-# (rides inside the ER pipeline's timing), sim_containment_pairs /
-# graph_bfs_layers / io_* (fixture-constant universes or protocol ops).
-R7_HEADLINE = [
-    "join_bloom_pruned",          # bloom build + pruned fact scan + exact join
-    "embed_kmeans_iter",          # 2 Lloyd iterations, broadcast centroids
-    "text_tfidf_topterms",        # tf + df + vocab-broadcast ranking
-    "pipeline_entity_resolution", # block->match->CC->canonicalize end-to-end
-    "events_streak_islands",      # distinct + islands window + double agg
-    "window_skyline_2d",          # banded local sweep + global candidate sweep
-    "ts_ewma_smooth",             # 8-lag shared-sort window, all-integer
-    "search_bm25_topk",           # early-filtered tf + broadcast idf + top-k
-    "search_hybrid_rrf",          # BM25 + cosine legs fused by integer RRF
-    "search_mmr_diverse",         # unrolled greedy rerank over 20 candidates
-    "sim_containment_prefix",     # one-sided prefix containment vs full corpus
-    "incr_scd2_build",            # change-log -> SCD2 interval dimension
-    "ts_changepoint_shift",       # daily rollup + 4 frame aggs, one sort
-    "text_mix_entropy",           # (source,lang) count + window + micro-floor
-]
-
-# Round-8/9 additions (same seeding rule): the audio/video near-dup banding,
-# the PQ encode/search pair, SemDeDup, packing, and span coverage.
-R9_HEADLINE = [
-    "multimodal_audio_neardup",   # r8: banded envelope-fp over real WAV decode
-    "embed_pq_codes",             # r9: map-only PQ encoding (1-row codebook BNLJ)
-    "search_pq_adc_topk",         # r9: ADC table-lookup scoring + TakeOrdered
-    "dedup_semantic",             # r9: bucket-scoped cosine election, nprobe=2
-    "pack_bins_nextfit",          # r9: per-shard Arrow greedy, metadata-only
-    "multimodal_video_neardup",   # r9: aligned per-frame dHash quorum join
-    "text_dup_span_coverage",     # r9: gram-DF shuffle + join-back coverage
-    "text_lm_nll",                # r9: integer-bits bigram LM quality gate
-    "text_bpe_train",             # r9: corpus word-count + 3 vocab-frame merges
-    "sketch_heavy_hitters",       # r9: per-batch MG + containment verdict
-]
-
-# Round-10 additions (first-measurement pins): the BPE train->apply pair,
-# IVF-scoped ADC, the snapshot admission gate (timing includes its two real
-# on-disk commits — the incr_* precedent), the bloom decontamination gate,
-# span removal, CMS, and hard-negative mining.
-R10_HEADLINE = [
-    "text_bpe_encode",            # r10: broadcast word->BPE-count join
-    "pack_bins_bpe",              # r10: next-fit on trained-BPE counts
-    "search_ivfpq_topk",          # r10: nprobe-scoped ADC, zero shuffles
-    # dedup_incremental_batch is deliberately NOT pinned here: its fixture
-    # commits two real snapshot versions per invocation, so a warm-median
-    # would time the fixture's parquet writes (~90% of its 36 s), not the
-    # probe; tools/scale_stress.py --incremental measures the operator's
-    # real claim (indexed probe cost ~ batch, not corpus) instead.
-    "dedup_semantic_wide",        # r10: k=24 wide-codebook branch
-    "contam_bloom_gate",          # r10: bloom-pruned decontamination
-    "text_dup_span_remove",       # r10: keep-first exact-substring removal
-    "sketch_countmin",            # r10: per-batch CMS grids + closed-form probe
-    "search_hard_negatives",      # r10: multi-query BM25 negative mining
-]
-
-# Round-11 additions (first-measurement pins): the SQ8 search leg and the
-# normalization pair. dedup_incremental_indexed is NOT pinned for the same
-# reason as dedup_incremental_batch (its fixture commits snapshot tables per
-# run; --incremental measures the real claim).
-R11_HEADLINE = [
-    "search_sq8_topk",            # r11: asymmetric SQ8 scan + TakeOrdered
-    "text_normalize_unicode",     # r11: map-only CCNet-style normalize chain
-    "dedup_exact_normalized",     # r11: digest shuffle over normalized text
-    "text_pmi_collocations",      # r11: one gram shuffle + broadcast marginals
-    "sketch_quantile_mergeable",  # r11: Arrow compactor partials + KB merge
-]
-
-# Round-12 additions (first-measurement pins). The recall companions
-# (search_sq8_rerank_recall, search_rp_recall) are not pinned separately:
-# each shares its search leg's scored frame and adds only K-row work.
-R12_HEADLINE = [
-    "search_sq8_rerank",          # r12: SQ8 coarse scan + candidate-only rerank
-    "dedup_lines_global",         # r12: corpus-wide keep-first line dedup
-    "sketch_theta_kmv",           # r12: bottom-K distinct sketch + set algebra
-    "contam_neardup",             # r12: asymmetric MinHash decontamination
-    "text_quality_classifier",    # r12: NB weight-table broadcast apply
-    "ts_seasonal_profile",        # r12: (type, hour) cells + window ratios
-    "search_rp_topk",             # r12: 16-dim JL literal-fold scan
-    "join_asof_nearest",          # r12: union-window nearest temporal match
-    "sketch_kmv_partitioned",     # r12: per-source bottom-K rollup + merge
-    "contam_span_remove",         # r12: broadcast bench grams, span surgery
-    "prune_prototypes",           # r12: argmin assignment + mean-ratio flag
-    # Third batch (web/URL stage + assembly): web_url_canonicalize is not
-    # pinned separately (map-only; it IS the projection inside the dedup
-    # leg), nor mix_budget_alloc (agg_sum_groupby floor + an 18-row frame).
-    "dedup_url_keep_first",       # r12: canonical-URL keep-first shuffle
-    "web_domain_cap",             # r12: per-host head-of-sequence cap
-    "ts_resample_ohlc",           # r12: hourly OHLC bars, agg-only min_by form
-    "text_vocab_nucleus",         # r12: top-p vocab cut on the count frame
-    "pack_interleave_sources",    # r12: two-phase skew-safe interleave rank
-    # Fourth batch: agg_median_countframe is not pinned (count-frame collapse
-    # = the agg_sum_groupby floor + a window on the collapsed frame).
-    "search_filtered_topk",       # r12: pushed-predicate exact retrieval
-    "events_attribution_last_touch",  # r12: ignore-nulls window attribution
-    # Fifth batch: scalar_url_parts is not pinned (map-only scan projection,
-    # the web_url_canonicalize rule); io_parquet_bloom_roundtrip is not
-    # pinned (its wall is the fixture's parquet write, the incr_* rule).
-    "pipeline_web_ingest",        # r12: URL funnel -> normalize composition
-    "stream_tumbling_topk",       # r12: windowed top-k on collapsed counts
-    # Sixth batch: mix_epoch_plan is not pinned (mix_budget_alloc's rule —
-    # same group frame, one more map-side division).
-    "events_top_paths",           # r12: 3-event path mining, two shared leads
-    # Seventh batch: incr_snapshot_tag_read is not pinned (its wall is the
-    # fixture's three snapshot commits — the dedup_incremental_batch rule).
-    "geo_knn_grid",               # r12: 3x3-cell broadcast probe + argmin encode
-    # Eighth batch (added after the builder's closing bench — their first
-    # builder-side numbers are absent from that session's record; the
-    # driver's own r12 run measures them):
-    "stream_sliding_distinct",    # r12: exact distinct over sliding windows
-    "multimodal_video_keyframes", # r12: decode + digest + lag keyframe cut
-    "search_matryoshka_topk",     # r12: prefix-slice scan, no transform at all
-    # search_matryoshka_recall shares the scored frame (the recall rule).
-    "resample_epoch_realize",     # r12: mixture plan -> prefix realization
-    "events_dau_wau",             # r12: sliding exact distinct via x7 expansion
-]
-
-# Round-13 additions (same seeding rule — first medians here become the
-# regression base). Not pinned, per the standing rules: text_gopher_rules,
-# geo_geojson_parse (map-only scan riders — the web_url_canonicalize rule),
-# geo_simplify_sweep (25-row fixture constant).
-R13_HEADLINE = [
-    "geo_point_in_polygon",       # r13: zero-shuffle broadcast-grid ray cast
-    "text_boilerplate_strip",     # r13: line counts + broadcast hot-set strip
-]
-
-R15_HEADLINE = [
-    "geo_tile_join",              # r15: tile pyramid × wide attribute build
-    "geo_crosswalk_apportion",    # r15: geometry→largest-remainder apportion
-    "events_session_transitions", # r15: sessions+transitions, one exchange
-]
-
-# Round-15 OPTIMIZATION round additions (first-measurement pins, the standing
-# seeding rule): the three bounded-output members of the query families the
-# r15 optimization rewrote (bitset pair verification + duplicate-group
-# banding — OPTIMIZATION_r15.md), so the rewrites' numbers are tracked by
-# the driver's own bench round-over-round. Their wide-output siblings
-# (dedup_minhash_pairs 7M rows, sim_jaccard_prefix) are deliberately NOT
-# added: collect() of millions of rows times driver deserialization, not the
-# computation (guide §1.4); their evidence lives in the noop-sink sweeps and
-# plans/r15/.
-R15_OPT_HEADLINE = [
-    "dedup_minhash_recall",       # r15 opt: banding + exact PPJoin legs, 1-row out
-    "search_ivfpq_recall",        # r15 opt: single-pass scoped-recall window
-    "search_ivfsq_recall",        # r15 opt: same fold on the SQ8 leg
-]
+# Groups emitted as "<group>_queries" name lists, in this key order. The r15
+# groups are tracked but have no key: the JSON shape predates them.
+EMITTED_GROUPS = ("llm", "r5", "r6", "r7", "r9", "r10", "r11", "r12", "r13")
+GROUPS = ("headline", *EMITTED_GROUPS, "r15", "r15_opt")
 
 # Per-topology regression base for the TPC-H power family: the round-6
 # per-query warm medians (SCALE.md "TPC-H power" table, sf0.1, local[32]).
@@ -308,7 +249,7 @@ BASELINE_SEC = {
     "dedup_simhash_pairs": 1.03,
     # pipeline_corpus_manifest RE-PINNED r14 (was 0.3488): the r3 seed was a
     # fast-tail draw of the same overhead-bound class as dedup_simhash_pairs
-    # — its first-ever interleaved A/B (tools/tpch_ab.py, 11 reps, companion
+    # — its first-ever interleaved A/B (tools/ab.py, 11 reps, companion
     # agg_sum_groupby running BELOW its base at 0.86x, i.e. a genuinely fast
     # host) measured a stable 0.55-0.70 s band, median 0.60 s, with the code
     # unchanged since r12 (BASELINE.md "r14 small-pin A/B"). 0.60 s is the
@@ -318,7 +259,7 @@ BASELINE_SEC = {
     "pipeline_corpus_manifest": 0.60,
     "contam_ngram_overlap": 1.5371,
     "pipeline_training_set": 1.3102,
-    # BENCH_r05.json (r05 medians — R5_HEADLINE regression base, seeded the
+    # BENCH_r05.json (r05 medians — the r5 group's regression base, seeded the
     # round after their first measurement, same rule as the LLM four)
     "complex_market_share": 0.8816,
     "complex_important_stock": 0.6136,
@@ -343,75 +284,117 @@ BASELINE_SEC = {
 }
 
 
-def main() -> None:
+# Overhead-bound bounded queries have a wide per-run band (individual
+# simhash runs span 0.79-2.08 s on an idle host — BASELINE.md r8), so their
+# 3-pass median is itself noisy; such queries get EXTRA shuffled mini-passes
+# (7 samples total) after the global passes.
+#
+# r14 small-pin rule (BASELINE.md "r14 small-pin A/B"): EVERY pinned query
+# whose pin is under 0.5 s is in that class by construction — its wall is
+# dominated by fixed per-run overhead (planning/AQE/scheduling) whose
+# variance is a large fraction of the pin, so a 3-sample median flags on
+# sampling error alone (the pipeline_corpus_manifest / dedup_simhash_pairs
+# failure mode). All of them get the 7-rep treatment automatically, so new
+# small pins can't re-introduce it.
+#
+# r15 (r14 ADVICE): the magnitude rule alone is not the right key — a query
+# RE-PINNED as overhead-bound stays in the class even when its honest median
+# lands above 0.5 s (pipeline_corpus_manifest's 0.60 s pin would otherwise
+# drop back to 3 samples, the exact failure mode the rule exists to
+# prevent). Membership here is "was ever diagnosed overhead-bound by a
+# dedicated A/B" (BASELINE.md records), permanent.
+OVERHEAD_REPINNED = {"dedup_simhash_pairs", "pipeline_corpus_manifest"}
+
+
+def group(name: str) -> list[str]:
+    """The tracked queries of one group, in table order."""
+    return [query for query, grp, _ in TRACKED if grp == name]
+
+
+def tpch_names() -> list[str]:
+    """The TPC-H power family: every registered complex_* topology."""
+    return sorted(n for n in registry.QUERIES if n.startswith("complex_"))
+
+
+def check_tables() -> list[str]:
+    """Return the measurement universe, or raise ValueError if the tables
+    above disagree with the registry.
+
+    The universe is the tracked table followed by the whole tpch_power
+    family, deduplicated: every query is sampled under the same
+    shuffled-context protocol (a family member timed in a different loop
+    than its siblings gets a different neighbor/position distribution and
+    false-flags against them — the r10/r11 lesson). A renamed query would
+    otherwise silently orphan its regression row, so the check runs before
+    anything is timed. Needs ``registry.load_all_operators()`` first.
+    """
+    names = [query for query, _, _ in TRACKED]
+    tracked = set(names)
+    tpch = tpch_names()
+    problems = {
+        "duplicated tracked names": sorted({n for n in names if names.count(n) > 1}),
+        "unknown groups": sorted({g for _, g, _ in TRACKED} - set(GROUPS)),
+        "unregistered tracked names": sorted(tracked - set(registry.QUERIES)),
+        "TPCH_BASE_SEC keys outside the complex_* family": sorted(
+            set(TPCH_BASE_SEC) - set(tpch)
+        ),
+        "untracked BASELINE_SEC keys": sorted(set(BASELINE_SEC) - tracked),
+        "untracked OVERHEAD_REPINNED names": sorted(OVERHEAD_REPINNED - tracked),
+    }
+    problems = {k: v for k, v in problems.items() if v}
+    if problems:
+        raise ValueError(f"bench tables disagree with the registry: {problems}")
+    return list(dict.fromkeys(names + tpch))
+
+
+def env_session(app_name: str = "elspark-bench"):
+    """The bench's session recipe: ``(spark, sf_dir)`` from
+    $SPARK_GRAFT_SF_DIR and $SPARK_GRAFT_CPUS, with local[cpus] and one
+    shuffle partition per core. The regression bases were measured under
+    exactly these confs; a 200-partition run against a 32-partition pin
+    measures task-scheduling overhead, not the query (BASELINE.md "tpch_power
+    A/B")."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = build_session(
+        app_name=app_name, master=f"local[{cpus}]", shuffle_partitions=cpus
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark, sf_dir
+
+
+def time_once(spark, sf_dir: str, name: str) -> float:
+    """Wall seconds of one collect() of ``name``, plan building included."""
+    fn = registry.QUERIES[name]  # fresh DataFrame: no shuffle-reuse flattery
+    start = time.perf_counter()
+    fn(spark, sf_dir).collect()
+    return time.perf_counter() - start
+
+
+def main() -> None:
+    registry.load_all_operators()
+    universe = check_tables()
+    headline = group("headline")
+    tpch = tpch_names()
+    spark, sf_dir = env_session()
     match = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(match.group(1).rstrip(".")) if match else None
 
-    registry.load_all_operators()
-    spark = build_session(
-        app_name="elspark-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Overhead-bound bounded queries have a wide per-run band (individual
-    # simhash runs span 0.79-2.08 s on an idle host — BASELINE.md r8), so
-    # their 3-pass median is itself noisy; such queries get EXTRA shuffled
-    # mini-passes (7 samples total) after the global passes.
-    #
-    # r14 small-pin rule (BASELINE.md "r14 small-pin A/B"): EVERY pinned
-    # query whose pin is under 0.5 s is in that class by construction — its
-    # wall is dominated by fixed per-run overhead (planning/AQE/scheduling)
-    # whose variance is a large fraction of the pin, so a 3-sample median
-    # flags on sampling error alone (the pipeline_corpus_manifest /
-    # dedup_simhash_pairs failure mode). All of them get the 7-rep
-    # treatment automatically, so new small pins can't re-introduce it.
-    #
-    # r15 (r14 ADVICE): the magnitude rule alone is not the right key — a
-    # query RE-PINNED as overhead-bound stays in the class even when its
-    # honest median lands above 0.5 s (pipeline_corpus_manifest's 0.60 s
-    # pin would otherwise drop back to 3 samples, the exact failure mode
-    # the rule exists to prevent). Membership here is "was ever diagnosed
-    # overhead-bound by a dedicated A/B" (BASELINE.md records), permanent.
-    OVERHEAD_REPINNED = {"dedup_simhash_pairs", "pipeline_corpus_manifest"}
     extra_reps = {n: 7 for n in OVERHEAD_REPINNED}
     extra_reps.update(
         {n: 7 for n, pin in BASELINE_SEC.items() if pin < 0.5}
     )
     n_passes = 3
 
-    tpch_names = sorted(n for n in registry.QUERIES if n.startswith("complex_"))
-    # ONE measurement universe: headliners + the whole tpch_power family,
-    # every query sampled under the same shuffled-context protocol (a family
-    # member timed in a different loop than its siblings gets a different
-    # neighbor/position distribution and false-flags against them — the
-    # r10/r11 lesson).
-    universe = list(
-        dict.fromkeys(
-            HEADLINE + LLM_HEADLINE + R5_HEADLINE + R6_HEADLINE + R7_HEADLINE
-            + R9_HEADLINE + R10_HEADLINE + R11_HEADLINE + R12_HEADLINE
-            + R13_HEADLINE + R15_HEADLINE + R15_OPT_HEADLINE + tpch_names
-        )
-    )
-
-    def time_once(name: str) -> float:
-        fn = registry.QUERIES[name]  # fresh DataFrame: no shuffle-reuse flattery
-        start = time.perf_counter()
-        fn(spark, sf_dir).collect()
-        return time.perf_counter() - start
-
     rng = random.Random(0x5F12)  # fixed seed: runs are reproducible
     for name in universe:  # warm-up pass, fixed order, untimed
-        time_once(name)
+        time_once(spark, sf_dir, name)
     samples: dict[str, list[float]] = {name: [] for name in universe}
     for _ in range(n_passes):
         order = universe[:]
         rng.shuffle(order)
         for name in order:
-            samples[name].append(time_once(name))
+            samples[name].append(time_once(spark, sf_dir, name))
     max_extra = max(extra_reps.values(), default=n_passes) - n_passes
     for extra_pass in range(max_extra):
         order = [
@@ -420,7 +403,7 @@ def main() -> None:
         ]
         rng.shuffle(order)
         for name in order:
-            samples[name].append(time_once(name))
+            samples[name].append(time_once(spark, sf_dir, name))
     timings = {
         name: round(statistics.median(runs), 4)
         for name, runs in samples.items()
@@ -429,14 +412,11 @@ def main() -> None:
     # TPC-H-shape power total: the 21 complex_* topologies — one number for
     # the whole reference-class analytical family, tracked round-over-round
     # next to the per-operator headliners. ~13 s at sf0.1 in r5 (SCALE.md).
-    tpch_per_query = {name: timings[name] for name in tpch_names}
+    tpch_per_query = {name: timings[name] for name in tpch}
     tpch_total = sum(tpch_per_query.values())
-    # Every base key must still name a registered topology (a rename would
-    # otherwise silently orphan its regression row), and any topology
-    # WITHOUT a base is listed so a new one can't dodge tracking forever.
-    stale_base = sorted(set(TPCH_BASE_SEC) - set(tpch_names))
-    assert not stale_base, f"TPCH_BASE_SEC keys missing from registry: {stale_base}"
-    tpch_no_base = sorted(set(tpch_names) - set(TPCH_BASE_SEC))
+    # Any topology WITHOUT a base is listed so a new one can't dodge
+    # tracking forever (stale base keys already raised in check_tables).
+    tpch_no_base = sorted(set(tpch) - set(TPCH_BASE_SEC))
     tpch_vs_r6 = {
         name: round(sec / TPCH_BASE_SEC[name], 3)
         for name, sec in tpch_per_query.items()
@@ -504,7 +484,7 @@ def main() -> None:
             # growth slope reads directly as an sf0.1 -> sf1 scaling row.
             base_label = f"sf{sf:g}" if sf else "x1"
             big_label = f"sf{sf * scale_mult:g}" if sf else f"x{scale_mult}"
-            for name in HEADLINE:
+            for name in headline:
                 fn = registry.QUERIES[name]
                 t1 = noop_median(fn, sf_dir)
                 tm = noop_median(fn, big_dir)
@@ -521,21 +501,13 @@ def main() -> None:
         json.dumps(
             {
                 "metric": "headline_queries_warm_total",
-                "value": round(sum(timings[n] for n in HEADLINE), 4),
+                "value": round(sum(timings[n] for n in headline), 4),
                 "unit": "sec",
                 "queries": timings,
-                "llm_queries": LLM_HEADLINE,
-                "r5_queries": R5_HEADLINE,
-                "r6_queries": R6_HEADLINE,
-                "r7_queries": R7_HEADLINE,
-                "r9_queries": R9_HEADLINE,
-                "r10_queries": R10_HEADLINE,
-                "r11_queries": R11_HEADLINE,
-                "r12_queries": R12_HEADLINE,
-                "r13_queries": R13_HEADLINE,
+                **{f"{g}_queries": group(g) for g in EMITTED_GROUPS},
                 "tpch_power": {
                     "total_sec": round(tpch_total, 4),
-                    "n_queries": len(tpch_names),
+                    "n_queries": len(tpch),
                     "per_query": tpch_per_query,
                     "vs_r6": tpch_vs_r6,
                     "family_median_ratio": round(tpch_family_median, 3),

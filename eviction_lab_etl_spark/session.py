@@ -22,7 +22,8 @@ import zipfile
 from pyspark.sql import SparkSession
 
 # Confs that are runtime-settable (SQL confs): applied defensively even to
-# driver-provided sessions we did not build ourselves.
+# driver-provided sessions we did not build ourselves. Every key must be
+# modifiable at runtime — configure() runs on every load().
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
@@ -33,10 +34,14 @@ RUNTIME_CONFS: dict[str, str] = {
     # this is the engine's incremental-rebuild primitive (the Make-mtime analog,
     # SURVEY §4.1) used by streaming foreachBatch upserts.
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
+}
+
+# Static confs: only the builder of a session we launch can set them; on a
+# driver-provided session they keep the driver's values.
+STATIC_CONFS: dict[str, str] = {
     # local[*] defaults to task.maxFailures=1, so one transient Python-worker
     # crash (observed ~1/100 mapInPandas stages under full-suite load) fails
-    # the whole job; retry like a real cluster does. Static conf: effective in
-    # sessions we build, silently skipped on driver-provided ones.
+    # the whole job; retry like a real cluster does.
     "spark.task.maxFailures": "4",
     # Dump the worker's Python stack on segfault/OOM kill instead of a bare
     # "worker exited unexpectedly" — costs nothing, makes crashes attributable.
@@ -79,12 +84,7 @@ def _ship_package(spark: SparkSession) -> None:
 def configure(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine confs to an existing session (idempotent)."""
     for key, value in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(key, value)
-        except Exception:
-            # Non-settable in this session (e.g. static conf already fixed) —
-            # the build_session path sets it at construction time instead.
-            pass
+        spark.conf.set(key, value)
     _ship_package(spark)
     return spark
 
@@ -112,7 +112,7 @@ def build_session(
     builder = builder.config(
         "spark.driver.memory", os.environ.get("ELSPARK_DRIVER_MEMORY", "8g")
     )
-    for key, value in RUNTIME_CONFS.items():
+    for key, value in {**RUNTIME_CONFS, **STATIC_CONFS}.items():
         builder = builder.config(key, value)
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))

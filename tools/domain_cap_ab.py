@@ -17,7 +17,8 @@ the SAME capped set, and times them:
    hot the domain is.
 
 Usage: python tools/domain_cap_ab.py [N ...]     # default: 2_000_000 8_000_000
-Prints one JSON line per N; record results in SCALE.md.
+Runs on bench.py's session (local[$SPARK_GRAFT_CPUS]); prints one JSON line
+per N; record results in SCALE.md.
 """
 
 from __future__ import annotations
@@ -33,7 +34,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from eviction_lab_etl_spark.session import build_session
+import bench
+
 
 CAP = 100
 BKT = 4096
@@ -88,10 +90,7 @@ def cap_twophase(docs, prune: bool):
 
 def main() -> None:
     ns = [int(a) for a in sys.argv[1:]] or [2_000_000, 8_000_000]
-    spark = build_session(
-        app_name="domain-cap-ab", master="local[32]", shuffle_partitions=32
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, _ = bench.env_session("domain-cap-ab")
     for n in ns:
         plans = {
             "window": lambda: cap_window(corpus(spark, n)),

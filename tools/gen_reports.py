@@ -104,7 +104,7 @@ def gen_plans(path: str, spark, sf_dir: str) -> None:
         f.write("\n".join(lines))
 
 
-if __name__ == "__main__":
+def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     registry.load_all_operators()
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -113,3 +113,7 @@ if __name__ == "__main__":
     spark.sparkContext.setLogLevel("ERROR")
     gen_plans(os.path.join(repo, "PLANS.md"), spark, sf_dir)
     print("wrote OPERATORS.md and PLANS.md")
+
+
+if __name__ == "__main__":
+    main()

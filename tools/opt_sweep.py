@@ -10,6 +10,9 @@ codegen ids) is what gets counted. Output: one JSON file
 Usage:
   python tools/opt_sweep.py out.json [sf_dir] [reps] [name ...]
 
+sf_dir defaults to $SPARK_GRAFT_SF_DIR; the session is bench.py's
+(local[$SPARK_GRAFT_CPUS], one shuffle partition per core).
+
 Set SPARK_GRAFT_SINK=noop to time ``df.write.format("noop")`` instead of
 ``collect()`` (guide §1.4: computes every column of every row without paying
 driver deserialization — the right sink for wide/large outputs where collect
@@ -28,26 +31,21 @@ REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_DIR not in sys.path:
     sys.path.insert(0, REPO_DIR)
 
+import bench
 from eviction_lab_etl_spark import registry
 from eviction_lab_etl_spark.plans.audit import audit_plan
-from eviction_lab_etl_spark.session import build_session
 
 
 def main() -> None:
     out_path = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 
     registry.load_all_operators()
     names = sys.argv[4:] or sorted(registry.QUERIES)
     names = [n for n in names if n in registry.QUERIES]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = build_session(
-        app_name="elspark-opt-sweep",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, sf_dir = bench.env_session("elspark-opt-sweep")
+    if len(sys.argv) > 2:
+        sf_dir = sys.argv[2]
 
     noop = os.environ.get("SPARK_GRAFT_SINK") == "noop"
 

@@ -12,8 +12,9 @@ driver-bound, collect-bound, or quadratic in an unbounded input.
 Usage:
     python tools/scale_stress.py [mult ...]     # default: 1 10 30
 
-Writes scaled data under .scratch/ (gitignored) and prints one JSON line per
-multiplier; `tools/gen_scale_md.py`-style summary goes to SCALE.md by hand.
+Runs on bench.py's session (local[$SPARK_GRAFT_CPUS]). Writes scaled data
+under .scratch/ (gitignored) and prints one JSON line per multiplier;
+`tools/gen_scale_md.py`-style summary goes to SCALE.md by hand.
 """
 
 from __future__ import annotations
@@ -28,8 +29,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+import bench
 from eviction_lab_etl_spark import registry
-from eviction_lab_etl_spark.session import build_session
 from eviction_lab_etl_spark.sources.loader import TABLES, load
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -893,10 +894,7 @@ def main() -> None:
             STRESS[:] = [n for n in STRESS if n in only]
     mults = [int(a) for a in args if not a.startswith("--")] or [1, 10, 30]
     registry.load_all_operators()
-    spark = build_session(
-        app_name="elspark-scale-stress", master="local[32]", shuffle_partitions=32
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, _ = bench.env_session("elspark-scale-stress")
 
     if incremental_only:
         for mult in mults:

@@ -15,7 +15,7 @@ Broadcast is disabled throughout — at 100 TB neither side of a fact↔fact joi
 broadcasts, and letting the 8 MB dim broadcast here would measure nothing.
 
 Usage: python tools/skew_stress.py [mult]     # default 20 → 2M fact rows
-Prints one JSON line.
+Runs on bench.py's session (local[$SPARK_GRAFT_CPUS]); prints one JSON line.
 """
 
 from __future__ import annotations
@@ -30,8 +30,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+import bench
 from eviction_lab_etl_spark.plans.layout import salted_join
-from eviction_lab_etl_spark.session import build_session
 from eviction_lab_etl_spark.sources.loader import load
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -196,10 +196,7 @@ def timed_session(spark, dst: str, two_phase: bool) -> float:
 
 def main() -> None:
     mult = int(sys.argv[1]) if len(sys.argv) > 1 else 20
-    spark = build_session(
-        app_name="elspark-skew-stress", master="local[32]", shuffle_partitions=32
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, _ = bench.env_session("elspark-skew-stress")
     # Force the fact↔dim join onto the shuffle path (the 100 TB shape).
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
