@@ -39,7 +39,8 @@ class CompactorSketch:
     the callers anyway."""
 
     def __init__(self, k: int = K_DEFAULT) -> None:
-        assert k >= 2 and k % 2 == 0
+        if k < 2 or k % 2:
+            raise ValueError(f"k must be an even integer >= 2, got {k}")
         self.k = k
         self.levels: list[list[int]] = [[]]
         self.parity: list[int] = [0]
@@ -73,7 +74,8 @@ class CompactorSketch:
         """Merge entry point: route a (value, weight=2**l) pair into its
         native level."""
         lvl = weight.bit_length() - 1
-        assert weight == 1 << lvl, "weights must be powers of two"
+        if weight != 1 << lvl:
+            raise ValueError("weights must be powers of two")
         while lvl >= len(self.levels):
             self.levels.append([])
             self.parity.append(0)

@@ -372,7 +372,8 @@ def incr_snapshot_time_travel(spark, sf_dir):
     three manifest resolutions plus distributed parquet scans — no data is
     copied to read the past."""
     table = _replay_snapshot_fixture(spark, sf_dir, "elspark_snap")
-    assert table.latest_version() == 3
+    if table.latest_version() != 3:
+        raise RuntimeError("snapshot fixture must replay to version 3")
     per_version = [
         table.read(spark, version=v).withColumn("version", F.lit(v).cast("long"))
         for v in (1, 2, 3)
@@ -556,11 +557,13 @@ def incr_compact_roundtrip(spark, sf_dir):
     pre_version = table.latest_version()
     pre_files = table.files(pre_version)
     v = table.compact(spark, target_files=1)
-    assert v == pre_version + 1, "compaction must claim a NEW version"
-    assert len(table.files(v)) == 1 < len(pre_files), "file count must drop"
-    assert table.read(spark, version=pre_version).count() == table.read(
-        spark, version=v
-    ).count(), "pre-compaction version must remain readable"
+    if v != pre_version + 1:
+        raise RuntimeError("compaction must claim a NEW version")
+    if not len(table.files(v)) == 1 < len(pre_files):
+        raise RuntimeError("file count must drop")
+    pre_rows = table.read(spark, version=pre_version).count()
+    if pre_rows != table.read(spark, version=v).count():
+        raise RuntimeError("pre-compaction version must remain readable")
     return (
         table.read(spark)
         .groupBy("od_year")
@@ -771,7 +774,8 @@ def dedup_incremental_batch(spark, sf_dir):
     from eviction_lab_etl_spark.functions.minhash import minhash_batch_matches
 
     table = _ingest_snapshot_fixture(spark, sf_dir, "elspark_ingestnd")
-    assert table.latest_version() == 2
+    if table.latest_version() != 2:
+        raise RuntimeError("ingest fixture must replay to version 2")
     old = table.read(spark, version=1)
     batch = _ib_batch_diff(spark, table)
 
@@ -839,7 +843,8 @@ def dedup_incremental_indexed(spark, sf_dir):
     )
 
     table = _ingest_snapshot_fixture(spark, sf_dir, "elspark_ingestnd")
-    assert table.latest_version() == 2
+    if table.latest_version() != 2:
+        raise RuntimeError("ingest fixture must replay to version 2")
     old = table.read(spark, version=1)
     batch = _ib_batch_diff(spark, table)
 

@@ -26,7 +26,7 @@ manifest-pointer swap:
 Scale design: the manifest holds file paths only, so its size is
 O(files), not O(rows) — at 100 TB with 128 MB files that is ~10^6 short
 strings per manifest, read once per query by the driver. Data-file IO is
-fully distributed (plain ``spark.read.parquet`` over the named files);
+fully distributed (a plain parquet scan over the named files);
 the commit path touches zero data bytes. Compaction (rewriting many small
 files into few, then committing the swapped file list) is just another
 commit under this protocol.
@@ -41,6 +41,8 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from eviction_lab_etl_spark.sources.loader import read_parquet
 
 
 class CommitConflict(Exception):
@@ -317,11 +319,13 @@ class SnapshotTable:
         from pre-widening files reading NULL for the added columns — and
         time travel to a pre-widening version still returns exactly that
         version's narrower schema, because schema is a property of the files
-        a manifest names, not of the table."""
+        a manifest names, not of the table. Data files are immutable, so a
+        repeated read of one version resolves its merged schema from the
+        loader's memo and launches no footer-merging job."""
         files = self.files(version)
         if not files:
             raise ValueError("empty table (version 0 has no files)")
-        return spark.read.option("mergeSchema", "true").parquet(*files)
+        return read_parquet(spark, files, merge=True)
 
     # ---- named refs (tags) ---------------------------------------------
     def _tag_path(self, name: str) -> str:

@@ -20,12 +20,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eviction_lab_etl_spark.registry import query
-from eviction_lab_etl_spark.sources.loader import load, normalize_events_ts
+from eviction_lab_etl_spark.sources.loader import load, normalize_events_ts, read_parquet
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet, applying the ts-nanos recipe."""
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    batch = read_parquet(spark, f"{sf_dir}/events.parquet")
     # The streaming file source requires a directory: load the sf_dir with a
     # glob filter selecting just the events file.
     stream = (
@@ -283,8 +283,9 @@ def stream_snapshot_sink(spark, sf_dir):
     # Replay the last batch id by hand: the ledger must make it a no-op.
     versions_before = table.latest_version()
     done = max(table.committed_meta("batch_id"))
-    commit_batch(spark.read.parquet(f"{sf_dir}/events.parquet").limit(1), done)
-    assert table.latest_version() == versions_before, "duplicate batch committed"
+    commit_batch(read_parquet(spark, f"{sf_dir}/events.parquet").limit(1), done)
+    if table.latest_version() != versions_before:
+        raise RuntimeError("duplicate batch committed")
     return (
         table.read(spark)
         .groupBy("od")
