@@ -65,6 +65,26 @@ _RECHECK_QUEUE: tuple[str, ...] = (
     "sim_jaccard_prefix",
     "sim_containment_prefix",
     "sim_containment_pairs",
+    # --- Code-changed, same oracle: every cache and lineage cut now goes
+    # through functions/pins.py. The near-dup graph queries lost their
+    # session-lifetime edge persist (multi-branch readers pin the edges to
+    # their own result; connected components, and so also
+    # pipeline_entity_resolution, reads its input once through one
+    # checkpoint); both UDTFs request Arrow per function instead of
+    # setting the session conf, and udtf_explode_pos lost its JVM
+    # posexplode fallback; the MMR greedy imports pins.truncate.
+    "dedup_cluster_cc",
+    "dedup_canonical_docs",
+    "graph_triangle_count",
+    "graph_degree_hist",
+    "sim_cross_lang_pairs",
+    "graph_pagerank",
+    "graph_bfs_layers",
+    "split_cluster_safe",
+    "pipeline_entity_resolution",
+    "udtf_explode_pos",
+    "udtf_dynamic_schema",
+    "search_mmr_diverse",
     #
     # The r16 tranche's other four names (sim_ann_lsh_recall and the three
     # multimodal near-dup rows) were hand-removed: all verified green in

@@ -150,7 +150,6 @@ def band_buckets(
     signatures: DataFrame,
     bands: int = 32,
     rows_per_band: int = 3,
-    with_sig: bool = False,
 ) -> DataFrame:
     """(id, band, key): each signature exploded into its ``bands`` band
     buckets, the key being the STRUCT of the slice's values (rows_per_band
@@ -159,9 +158,7 @@ def band_buckets(
     which is what makes a banded join reproducible in a value-level SQL
     oracle. (At extreme scale the key can be hashed back to 8 bytes — the
     2⁻⁶⁴ false candidates it admits are removed by the exact verification
-    join anyway.) ``with_sig=True`` carries the full signature array along
-    (bands × rows_per_band longs per bucket row) for the first-collision
-    dedup predicate in ``lsh_candidate_pairs``."""
+    join anyway.)"""
     band_entries = F.array(
         *[
             F.struct(
@@ -176,9 +173,8 @@ def band_buckets(
             for b in range(bands)
         ]
     )
-    cols = ["id", "sig"] if with_sig else ["id"]
-    return signatures.select(*cols, F.explode(band_entries).alias("e")).select(
-        *cols, F.col("e.band").alias("band"), F.col("e.key").alias("key")
+    return signatures.select("id", F.explode(band_entries).alias("e")).select(
+        "id", F.col("e.band").alias("band"), F.col("e.key").alias("key")
     )
 
 

@@ -9,15 +9,13 @@ count 4 → 24 in `dedup_minhash_pairs`). A ``persist()`` collapses the
 recompute, but a bare persist pins corpus-sized executor memory for the
 SESSION (the graph_pagerank leak, round-7 verdict item 2).
 
-The `pipeline_corpus_clean` finalizer precedent bounds the lifetime: a
-``weakref.finalize`` on the RESULT handle unpersists the diamond the moment
-the caller drops the result. What blocked applying it to the library
-functions (r15) is that their callers immediately DERIVE over the returned
-frame (``.select(...)``, ``.agg(...)``), dropping the handle the finalizer
-watches before execution. ``adopt_pins`` closes that gap: it TRANSFERS the
-pin obligation from the library-returned frame (still alive as a local in
-the caller) onto the caller's own result, so the cache lives exactly as
-long as the one handle the driver holds — never the session.
+``pin_to`` bounds the lifetime: a ``weakref.finalize`` on the RESULT handle
+unpersists the diamond the moment the caller drops the result. Callers
+usually DERIVE over a returned frame (``.select(...)``, ``.agg(...)``),
+dropping the handle the finalizer watches before execution; ``adopt_pins``
+TRANSFERS the pin obligation from that frame (still alive as a local in the
+caller) onto the caller's own result, so the cache lives exactly as long as
+the one handle the driver holds — never the session.
 
 Cache-vs-correctness note: the pins are a pure plan-shape optimization.
 Every pinned lineage is deterministic (the dictionary ids are a pure
@@ -25,8 +23,34 @@ function of the token strings — see ``token_bitsets``), so a cache miss,
 eviction or early unpersist degrades to recompute with IDENTICAL values.
 No result is cached across bench/oracle invocations: each call of a query
 function builds fresh frames, and the finalizer returns the memory when
-the driver drops the result (pinned by
-tests/test_plans.py::test_corpus_clean_cache_pin_is_bounded's pattern).
+the driver drops the result (tests/test_plans.py::
+test_corpus_clean_cache_pin_is_bounded, over pinned and graph queries;
+test_pinned_query_identical_under_eviction unpersists every pin between
+build and collect).
+
+Order: pin a frame before any pinned frame DERIVED from it is built. Spark
+builds a cached plan at ``persist()`` time from the caches that exist then,
+so a base pinned after its derivatives leaves their cached plans recomputing
+it (``pipeline_corpus_clean`` pins its survivors before the minhash stage).
+
+StorageLevel: ``persist()``'s default, MEMORY_AND_DISK. The pinned frames
+are corpus-sized (grouped token sets, bitset masks, tokenized survivors);
+MEMORY_ONLY would turn an executor-memory squeeze into a silent recompute
+of the very diamond the pin exists to collapse, while spilling keeps the
+one-materialization guarantee and costs disk only under pressure. The
+bound that matters is the LIFETIME (one result handle), not the level.
+
+Lineage truncation (``truncate``) is the other materialization: iterative
+plans (connected components, BFS rounds, the MMR greedy) re-reference the
+previous round's frame, so the plan doubles per round unless it is cut.
+The rule: reliable ``checkpoint()`` when the SparkContext has a checkpoint
+dir (files on HDFS/S3 survive executor loss), ``localCheckpoint()`` when it
+does not (executor-local blocks; in local mode executor loss is JVM death
+anyway). Unlike a pin, a checkpoint IS the frame's lineage afterwards, so
+its blocks cannot be released early; they live as long as a JVM plan
+references them and are reclaimed by Spark's ContextCleaner after that.
+This module is the only one in the package that persists, checkpoints or
+registers a finalizer (tests/test_library.py's AST guard).
 """
 
 from __future__ import annotations
@@ -46,7 +70,16 @@ _PINS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 def pin_to(result: DataFrame, *frames: DataFrame) -> DataFrame:
     """Persist ``frames`` for exactly the lifetime of ``result``'s Python
     handle: unpersist fires when ``result`` is garbage-collected (inert at
-    interpreter shutdown — the JVM dies with the session)."""
+    interpreter shutdown — the JVM dies with the session).
+
+    Raises ``ValueError`` if ``result`` is one of ``frames``: the
+    finalizer holds its frames strongly, so a self-pinned handle could
+    never be collected and its cache would never be released."""
+    if any(f is result for f in frames):
+        raise ValueError(
+            "pin_to: result is one of the pinned frames; pin it to a frame "
+            "derived from it instead"
+        )
     for f in frames:
         f.persist()
     _attach(result, list(frames))
@@ -79,6 +112,14 @@ def adopt_pins(child: DataFrame, *parents: DataFrame) -> DataFrame:
     if holder:
         _attach(child, holder)
     return child
+
+
+def truncate(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` and cut its lineage (module docstring: reliable
+    checkpoint when a checkpoint dir is set, executor-local otherwise)."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint()
 
 
 def _attach(df: DataFrame, holder: list[DataFrame]) -> None:

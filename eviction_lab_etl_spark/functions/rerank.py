@@ -12,7 +12,7 @@ unrolled plan needs already packaged:
 - Each greedy step references the selection subtree again, so WITHOUT lineage
   cuts the plan grows ~2^k Catalyst analysis work for KB of data (measured
   4.8 s → ~1.4–2.1 s saved at k = 5, SURVEY §8 r7t). Every step runs through
-  ``clustering._truncate`` — reliable checkpoint when a dir is configured,
+  ``pins.truncate`` — reliable checkpoint when a dir is configured,
   executor-local blocks otherwise.
 - The candidate frame is expected to be SMALL (a top-k retrieval page, tens
   of rows): every join in the greedy broadcasts; nothing here should ever see
@@ -31,6 +31,8 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from eviction_lab_etl_spark.functions.pins import truncate
 
 
 def mmr_rerank(
@@ -51,7 +53,6 @@ def mmr_rerank(
     — bit-identical across engines per §2.0 rule 6). ``truncate_input=False``
     skips the defensive lineage cut when the caller already truncated
     ``cand`` (avoids a redundant materialization)."""
-    from eviction_lab_etl_spark.operators.clustering import _truncate
     from eviction_lab_etl_spark.operators.dedup_text import cosine
 
     if k < 1:
@@ -65,7 +66,7 @@ def mmr_rerank(
         )
     score = sim if sim is not None else cosine
     if truncate_input:
-        cand = _truncate(cand)
+        cand = truncate(cand)
     sel = (
         cand.orderBy(F.desc(rel_col), id_col)
         .limit(1)
@@ -84,5 +85,5 @@ def mmr_rerank(
             .limit(1)
             .select(F.col(id_col), F.lit(step).cast("bigint").alias("rnk"))
         )
-        sel = _truncate(sel.unionByName(pick))
+        sel = truncate(sel.unionByName(pick))
     return sel

@@ -22,11 +22,11 @@ labels fall out of the final edge list without a separate propagation pass.
 Durability at cluster scale: iterative jobs MUST truncate lineage (the plan
 doubles per round otherwise), but ``localCheckpoint()`` stores blocks on
 executors only — lose one executor mid-iteration on a 1000-node cluster and
-the truncated lineage makes the job unrecoverable. ``_truncate`` therefore
-uses reliable ``checkpoint()`` whenever a checkpoint directory is configured
-(``SparkContext.setCheckpointDir`` to HDFS/S3, or the ``checkpoint_dir``
-argument) and falls back to ``localCheckpoint()`` only when none is set —
-the local-mode default where executor loss means JVM death anyway.
+the truncated lineage makes the job unrecoverable. ``pins.truncate``
+therefore uses reliable ``checkpoint()`` whenever the session has a
+checkpoint directory (``SparkContext.setCheckpointDir`` to HDFS/S3) and falls
+back to ``localCheckpoint()`` only when none is set — the local-mode default
+where executor loss means JVM death anyway.
 
 The registered query's oracle expresses the same fixpoint as a DuckDB
 recursive CTE — one of the few genuinely iterative computations ANSI SQL can
@@ -39,17 +39,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from eviction_lab_etl_spark.functions.determinism import big
+from eviction_lab_etl_spark.functions.pins import adopt_pins, pin_to, truncate
 from eviction_lab_etl_spark.registry import query
 
 
-def _truncate(df: DataFrame) -> DataFrame:
-    """Cut lineage between iterations. Reliable checkpoint when a checkpoint
-    dir is configured (survives executor loss); executor-local blocks as the
-    local-mode fallback."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint()
+# THE near-dup edge list on the oracle side — the SQL twin of
+# ``neardup_edges`` (token-set Jaccard >= 0.9 over doc_id < 200, a < b),
+# spelled once and interpolated into every graph oracle below. The
+# recursive oracles name it ``edges0`` and symmetrize it as ``edges``.
+_NEARDUP_EDGES_SQL = """tok AS (
+        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
+        FROM documents WHERE doc_id < 200
+    ),
+    sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
+    pr AS (
+        SELECT t1.doc_id AS a, t2.doc_id AS b, count(*) AS inter
+        FROM tok t1 JOIN tok t2 ON t1.w = t2.w AND t1.doc_id < t2.doc_id
+        GROUP BY 1, 2
+    ),
+    {name} AS (
+        SELECT a, b FROM pr
+        JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b
+        WHERE 10 * inter >= 9 * (sa.n + sb.n - inter)
+    )"""
+_NEARDUP_EDGES = _NEARDUP_EDGES_SQL.format(name="edges")
+_NEARDUP_EDGES0 = _NEARDUP_EDGES_SQL.format(name="edges0")
 
 
 def _signature(edges: DataFrame) -> tuple:
@@ -96,33 +110,32 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return members.unionByName(selves).distinct()
 
 
-def _cc_rounds(
-    edges: DataFrame, max_iter: int, checkpoint_dir: str | None
-) -> tuple[DataFrame, int]:
+def _cc_rounds(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
     """Run the contraction to fixpoint; return (labels, rounds-used)."""
-    spark = edges.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-    verts = (
-        edges.select(F.col("a").alias("v"))
-        .unionByName(edges.select(F.col("b").alias("v")))
-        .distinct()
-    )
-    cur = _truncate(
+    # ONE read of ``edges``: the oriented edge set (self-loops kept, so
+    # their vertex gets a label) is truncated once, and both the vertex set
+    # and the contraction read the checkpoint — the caller's edge lineage
+    # (a similarity join) never runs twice and needs no pin.
+    base = truncate(
         edges.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
         .distinct()
     )
+    verts = (
+        base.select(F.col("a").alias("v"))
+        .unionByName(base.select(F.col("b").alias("v")))
+        .distinct()
+    )
+    cur = base.filter(F.col("a") != F.col("b"))
     prev_sig = _signature(cur)
     rounds = 0
     converged = False
     for rounds in range(1, max_iter + 1):
         prev = cur
-        cur = _truncate(_small_star(_large_star(cur)))
+        cur = truncate(_small_star(_large_star(cur)))
         sig = _signature(cur)
         # Signature match is the cheap candidate test; equality is confirmed
         # exactly. Counts are equal (part of the signature), so a one-sided
-        # exceptAll suffices. Both sides are checkpointed, so this runs one
+        # exceptAll suffices. Both sides read checkpoints, so this runs one
         # small extra job exactly once, at convergence.
         if sig == prev_sig and cur.exceptAll(prev).isEmpty():
             converged = True
@@ -141,9 +154,7 @@ def _cc_rounds(
     return labels, rounds
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 25, checkpoint_dir: str | None = None
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """Label every vertex of an (a, b) edge list with the minimum vertex id
     reachable from it. Returns (v, lbl). Pure operator — any near-dup pair
     set (token Jaccard, SimHash, embedding cosine) can feed it.
@@ -153,48 +164,29 @@ def connected_components(
     O(log n) contraction makes the default bound generous for any graph
     whose component count fits the use case.
     """
-    labels, _ = _cc_rounds(edges, max_iter, checkpoint_dir)
+    labels, _ = _cc_rounds(edges, max_iter)
     return labels
-
 
 
 def neardup_edges(spark, sf_dir) -> DataFrame:
     """THE near-dup edge list (token-set Jaccard >= 0.9 over doc_id < 200,
     tightened from sim_jaccard_pairs' 0.6 report threshold to near-dup
     strength) — the single shared derivation behind clustering, canonical
-    selection, triangle counting, and the degree histogram. One definition,
-    one threshold, one persist: the edge set is orders of magnitude smaller
-    than its inverted-index lineage, and Spark's CacheManager dedupes the
-    identical plan across every consumer in a session, so the similarity
-    join runs once no matter how many graph diagnostics read it."""
+    selection, triangle counting, and the degree histogram (its SQL twin is
+    ``_NEARDUP_EDGES_SQL``). One definition, one threshold, and no cache of
+    its own: a caller that reads the edges in several plan branches pins
+    them to its OWN result (functions/pins.py), so nothing outlives the
+    query that built them."""
     from eviction_lab_etl_spark.operators.dedup_text import sim_jaccard_pairs
 
     pairs = sim_jaccard_pairs(spark, sf_dir)
-    return (
-        pairs.filter(10 * F.col("inter") >= 9 * F.col("uni"))
-        .select("a", "b")
-        .persist()
-    )
+    return pairs.filter(10 * F.col("inter") >= 9 * F.col("uni")).select("a", "b")
 
 
 @query(
     "dedup_cluster_cc",
-    oracle="""
-    WITH RECURSIVE tok AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
-        FROM documents WHERE doc_id < 200
-    ),
-    sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-    pr AS (
-        SELECT t1.doc_id AS a, t2.doc_id AS b, count(*) AS inter
-        FROM tok t1 JOIN tok t2 ON t1.w = t2.w AND t1.doc_id < t2.doc_id
-        GROUP BY 1, 2
-    ),
-    edges0 AS (
-        SELECT a, b FROM pr
-        JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b
-        WHERE 10 * inter >= 9 * (sa.n + sb.n - inter)
-    ),
+    oracle=f"""
+    WITH RECURSIVE {_NEARDUP_EDGES0},
     edges AS (SELECT a, b FROM edges0 UNION ALL SELECT b AS a, a AS b FROM edges0),
     walk(v, lbl) AS (
         SELECT DISTINCT a AS v, a AS lbl FROM edges
@@ -219,22 +211,8 @@ def dedup_cluster_cc(spark, sf_dir):
 
 @query(
     "dedup_canonical_docs",
-    oracle="""
-    WITH RECURSIVE tok AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
-        FROM documents WHERE doc_id < 200
-    ),
-    sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-    pr AS (
-        SELECT t1.doc_id AS a, t2.doc_id AS b, count(*) AS inter
-        FROM tok t1 JOIN tok t2 ON t1.w = t2.w AND t1.doc_id < t2.doc_id
-        GROUP BY 1, 2
-    ),
-    edges0 AS (
-        SELECT a, b FROM pr
-        JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b
-        WHERE 10 * inter >= 9 * (sa.n + sb.n - inter)
-    ),
+    oracle=f"""
+    WITH RECURSIVE {_NEARDUP_EDGES0},
     edges AS (SELECT a, b FROM edges0 UNION ALL SELECT b AS a, a AS b FROM edges0),
     walk(v, lbl) AS (
         SELECT DISTINCT a AS v, a AS lbl FROM edges
@@ -281,22 +259,8 @@ def dedup_canonical_docs(spark, sf_dir):
 
 @query(
     "graph_triangle_count",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
-        FROM documents WHERE doc_id < 200
-    ),
-    sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-    pr AS (
-        SELECT t1.doc_id AS a, t2.doc_id AS b, count(*) AS inter
-        FROM tok t1 JOIN tok t2 ON t1.w = t2.w AND t1.doc_id < t2.doc_id
-        GROUP BY 1, 2
-    ),
-    edges AS (
-        SELECT a, b FROM pr
-        JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b
-        WHERE 10 * inter >= 9 * (sa.n + sb.n - inter)
-    )
+    oracle=f"""
+    WITH {_NEARDUP_EDGES}
     SELECT (SELECT count(DISTINCT v) FROM (
                 SELECT a AS v FROM edges UNION ALL SELECT b FROM edges))
                AS n_vertices,
@@ -322,9 +286,8 @@ def graph_triangle_count(spark, sf_dir):
     endpoints first (node-iterator++), bounding wedges by the arboricity;
     the id-ordered form here keeps the oracle exact and the join topology
     identical."""
-    # The edge list feeds FIVE consumers here alone (vertex count, edge
-    # count, three join legs) — neardup_edges persists it once for all of
-    # this module's graph consumers.
+    # The edge list feeds FIVE consumers here (vertex count, edge count,
+    # three join legs): pinned to the result, it is built once per query.
     edges = neardup_edges(spark, sf_dir)
     verts = (
         edges.select(F.col("a").alias("v"))
@@ -341,27 +304,13 @@ def graph_triangle_count(spark, sf_dir):
         )
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    return verts.crossJoin(n_edges).crossJoin(tri)
+    return pin_to(verts.crossJoin(n_edges).crossJoin(tri), edges)
 
 
 @query(
     "graph_degree_hist",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
-        FROM documents WHERE doc_id < 200
-    ),
-    sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-    pr AS (
-        SELECT t1.doc_id AS a, t2.doc_id AS b, count(*) AS inter
-        FROM tok t1 JOIN tok t2 ON t1.w = t2.w AND t1.doc_id < t2.doc_id
-        GROUP BY 1, 2
-    ),
-    edges AS (
-        SELECT a, b FROM pr
-        JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b
-        WHERE 10 * inter >= 9 * (sa.n + sb.n - inter)
-    ),
+    oracle=f"""
+    WITH {_NEARDUP_EDGES},
     deg AS (
         SELECT v, count(*) AS degree FROM (
             SELECT a AS v FROM edges UNION ALL SELECT b AS v FROM edges
@@ -376,36 +325,23 @@ def graph_degree_hist(spark, sf_dir):
     diagnostic read BEFORE clustering: a heavy right tail (one doc similar
     to thousands) predicts hot keys in the connected-components shuffle and
     wedge explosion in triangle counting, and is exactly what degree-based
-    edge orientation / salting decisions key on. Reuses the persisted
-    triangle edge list when cached; two small aggregates (per-vertex
-    degree, then count-per-degree) on top of the symmetric edge union — the
+    edge orientation / salting decisions key on. The shared edge list,
+    pinned to the result (both sides of the symmetric union read it); two
+    small aggregates (per-vertex degree, then count-per-degree) on top — the
     histogram is ≤ max-degree rows no matter the corpus size."""
     edges = neardup_edges(spark, sf_dir)
     sym = edges.select(F.col("a").alias("v")).unionByName(
         edges.select(F.col("b").alias("v"))
     )
     deg = sym.groupBy("v").agg(F.count(F.lit(1)).alias("degree"))
-    return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_vertices"))
+    hist = deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_vertices"))
+    return pin_to(hist, edges)
 
 
 @query(
     "sim_cross_lang_pairs",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
-        FROM documents WHERE doc_id < 200
-    ),
-    sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-    pr AS (
-        SELECT t1.doc_id AS a, t2.doc_id AS b, count(*) AS inter
-        FROM tok t1 JOIN tok t2 ON t1.w = t2.w AND t1.doc_id < t2.doc_id
-        GROUP BY 1, 2
-    ),
-    edges AS (
-        SELECT a, b FROM pr
-        JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b
-        WHERE 10 * inter >= 9 * (sa.n + sb.n - inter)
-    )
+    oracle=f"""
+    WITH {_NEARDUP_EDGES}
     SELECT least(da.lang, db.lang) AS lang_lo,
            greatest(da.lang, db.lang) AS lang_hi,
            count(*) AS n_pairs
@@ -424,8 +360,8 @@ def sim_cross_lang_pairs(spark, sf_dir):
     weights if deduped only within language (the standard per-lang dedup
     silently keeps every cross-lingual twin). The language-pair key is
     canonicalized with least/greatest so (en, es) and (es, en) are one
-    row. Reuses the persisted shared edge list; the two label lookups are
-    broadcast joins against the doc_id→lang projection."""
+    row. The shared edge list is read once (no pin); the two label lookups
+    are broadcast joins against the doc_id→lang projection."""
     from eviction_lab_etl_spark.sources.loader import load
 
     edges = neardup_edges(spark, sf_dir)
@@ -450,22 +386,8 @@ def sim_cross_lang_pairs(spark, sf_dir):
 
 @query(
     "graph_pagerank",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
-        FROM documents WHERE doc_id < 200
-    ),
-    sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-    pr AS (
-        SELECT t1.doc_id AS a, t2.doc_id AS b, count(*) AS inter
-        FROM tok t1 JOIN tok t2 ON t1.w = t2.w AND t1.doc_id < t2.doc_id
-        GROUP BY 1, 2
-    ),
-    edges AS (
-        SELECT a, b FROM pr
-        JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b
-        WHERE 10 * inter >= 9 * (sa.n + sb.n - inter)
-    ),
+    oracle=f"""
+    WITH {_NEARDUP_EDGES},
     sym AS (
         SELECT a AS v, b AS u FROM edges
         UNION ALL SELECT b AS v, a AS u FROM edges
@@ -516,12 +438,10 @@ def graph_pagerank(spark, sf_dir):
     )
     deg = sym.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
     # link table: (v, u, d) where d = deg(u) — referenced by all three
-    # unrolled join steps. NOT persisted: the three link subtrees are
+    # unrolled join steps. Not pinned: the three link subtrees are
     # byte-identical, so Spark's ReuseExchange computes the link shuffle
-    # once per execution and streams it to every consumer — same
-    # compute-once guarantee as a persist() with NO session-lifetime
-    # executor-memory pin after the query finishes (a persist here leaked
-    # the cache on every invocation).
+    # once per execution and streams it to every consumer. The edge list
+    # under it IS pinned (to the result): sym, deg and every step read it.
     link = sym.join(deg.select(F.col("v").alias("u"), "d"), "u")
     ranks = deg.select("v", F.lit(1000000).cast("long").alias("r"))
     for _ in range(3):
@@ -532,27 +452,13 @@ def graph_pagerank(spark, sf_dir):
                 F.expr("CAST(150000 + (85 * sum(r div d)) div 100 AS BIGINT)").alias("r")
             )
         )
-    return ranks.select("v", F.col("r").alias("pagerank"))
+    return pin_to(ranks.select("v", F.col("r").alias("pagerank")), edges)
 
 
 @query(
     "graph_bfs_layers",
-    oracle="""
-    WITH RECURSIVE tok AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
-        FROM documents WHERE doc_id < 200
-    ),
-    sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-    pr AS (
-        SELECT t1.doc_id AS a, t2.doc_id AS b, count(*) AS inter
-        FROM tok t1 JOIN tok t2 ON t1.w = t2.w AND t1.doc_id < t2.doc_id
-        GROUP BY 1, 2
-    ),
-    edges0 AS (
-        SELECT a, b FROM pr
-        JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b
-        WHERE 10 * inter >= 9 * (sa.n + sb.n - inter)
-    ),
+    oracle=f"""
+    WITH RECURSIVE {_NEARDUP_EDGES0},
     edges AS (SELECT a, b FROM edges0 UNION ALL SELECT b AS a, a AS b FROM edges0),
     walk(v, d) AS (
         SELECT DISTINCT a AS v, 0 AS d FROM edges WHERE a < 20
@@ -577,8 +483,8 @@ def graph_bfs_layers(spark, sf_dir):
     CURRENT frontier (vertices first reached last round, typically a small
     fraction of the graph) against the edge list on the source vertex, then
     a min-depth merge keyed on vertex. The edge list is the near-dup
-    projection (orders of magnitude below the corpus, persisted once for
-    the whole graph family); per-round cost is frontier-proportional, never
+    projection (orders of magnitude below the corpus), pinned for the
+    query because every round reads it; per-round cost is frontier-proportional, never
     all-pairs, and the depth cap bounds the rounds. At a billion edges each
     round is one shuffle of (frontier ⋈ edges) + one vertex-keyed agg —
     the Pregel step, expressed declaratively."""
@@ -586,10 +492,12 @@ def graph_bfs_layers(spark, sf_dir):
     sym = edges.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
         edges.select(F.col("b").alias("v"), F.col("a").alias("u"))
     )
+    # Pinned before bfs_layers runs: each of its eager truncations reads
+    # the edges again.
+    sym = pin_to(sym, edges)
     seeds = sym.filter(F.col("v") < 20).select("v").distinct()
-    return bfs_layers(sym, seeds, max_depth=3).select(
-        F.col("v").alias("doc_id"), "depth"
-    )
+    layers = bfs_layers(sym, seeds, max_depth=3)
+    return adopt_pins(layers.select(F.col("v").alias("doc_id"), "depth"), sym)
 
 
 def bfs_layers(sym_edges: DataFrame, seeds: DataFrame, max_depth: int) -> DataFrame:
@@ -598,7 +506,7 @@ def bfs_layers(sym_edges: DataFrame, seeds: DataFrame, max_depth: int) -> DataFr
     hops, labeled with its minimum hop distance (column depth, bigint).
     Each round joins only the CURRENT frontier against the edges and
     anti-joins the known set — frontier-proportional work, the declarative
-    Pregel step. Lineage is cut between rounds with the same `_truncate`
+    Pregel step. Lineage is cut between rounds with the same `pins.truncate`
     discipline as `connected_components` (without it, round N's plan embeds
     round N-1's twice — frontier and known — so the tree doubles per round
     and a vanilla 200-shuffle-partition session re-executes every prior
@@ -608,7 +516,7 @@ def bfs_layers(sym_edges: DataFrame, seeds: DataFrame, max_depth: int) -> DataFr
     Property-tested against a pure-Python BFS (tests/test_properties.py);
     `graph_bfs_layers` hash-checks it against a recursive-CTE oracle on the
     near-dup graph."""
-    known = _truncate(
+    known = truncate(
         seeds.select("v").distinct().withColumn("depth", F.lit(0).cast("bigint"))
     )
     frontier = known
@@ -620,31 +528,17 @@ def bfs_layers(sym_edges: DataFrame, seeds: DataFrame, max_depth: int) -> DataFr
             .withColumn("depth", F.lit(step).cast("bigint"))
         )
         # New frontier = vertices not seen at a smaller depth.
-        frontier = _truncate(
+        frontier = truncate(
             reached.join(known.select("v"), "v", "left_anti")
         )
-        known = _truncate(known.unionByName(frontier))
+        known = truncate(known.unionByName(frontier))
     return known
 
 
 @query(
     "split_cluster_safe",
-    oracle="""
-    WITH RECURSIVE tok AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
-        FROM documents WHERE doc_id < 200
-    ),
-    sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-    pr AS (
-        SELECT t1.doc_id AS a, t2.doc_id AS b, count(*) AS inter
-        FROM tok t1 JOIN tok t2 ON t1.w = t2.w AND t1.doc_id < t2.doc_id
-        GROUP BY 1, 2
-    ),
-    edges0 AS (
-        SELECT a, b FROM pr
-        JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b
-        WHERE 10 * inter >= 9 * (sa.n + sb.n - inter)
-    ),
+    oracle=f"""
+    WITH RECURSIVE {_NEARDUP_EDGES0},
     edges AS (SELECT a, b FROM edges0 UNION ALL SELECT b AS a, a AS b FROM edges0),
     walk(v, lbl) AS (
         SELECT DISTINCT a AS v, a AS lbl FROM edges

@@ -12,8 +12,6 @@ place→state→national; year(o_orderdate) plays the data year.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -383,17 +381,19 @@ def pipeline_corpus_clean(spark, sf_dir):
     graph_pagerank leak, one level up. ReuseExchange can't stand in here
     (it reuses shuffles, and both consumers prune DIFFERENT columns below
     any exchange this frame could end in, so the subtrees never
-    canonicalize equal); instead a weakref finalizer unpersists the diamond
-    the moment the returned result handle is dropped — the cache lives
-    exactly as long as the one consumer the driver holds, never the
-    session (tests/test_plans.py::test_corpus_clean_cache_pin_is_bounded).
+    canonicalize equal); instead the diamond is pinned to the returned
+    result (functions/pins.py) and unpersisted the moment the driver drops
+    that handle — the cache lives exactly as long as the one consumer the
+    driver holds, never the session
+    (tests/test_plans.py::test_corpus_clean_cache_pin_is_bounded).
     """
     from eviction_lab_etl_spark.functions.minhash import minhash_near_dup_pairs
+    from eviction_lab_etl_spark.functions.pins import adopt_pins, pin_to
 
     docs = load(spark, sf_dir, "documents")
 
     # 1. exact dedup (keep lowest doc_id per digest) as ONE window pass +
-    # 2. tokenize ONCE; persist the diamond point (minhash + gate both read it)
+    # 2. tokenize ONCE; pin the diamond point (minhash + gate both read it)
     w_first = Window.partitionBy("h").orderBy("doc_id")
     toks = F.split("text", " ")
     survivors = (
@@ -407,11 +407,13 @@ def pipeline_corpus_clean(spark, sf_dir):
             F.size(toks).alias("n_tok"),
         )
         .withColumn("n_uniq", F.size("uniq"))
-        .persist()
     )
 
-    # 3. near-dedup: drop the higher doc_id of every verified >=0.6 pair
-    tokens = survivors.select("doc_id", F.explode("uniq").alias("w"))
+    # 3. near-dedup: drop the higher doc_id of every verified >=0.6 pair.
+    # `survivors` is pinned HERE, before the minhash library pins frames
+    # derived from it (pin order: functions/pins.py), or their cached plans
+    # would re-tokenize the corpus.
+    tokens = pin_to(survivors.select("doc_id", F.explode("uniq").alias("w")), survivors)
     near_pairs = minhash_near_dup_pairs(
         tokens,
         id_col="doc_id",
@@ -425,7 +427,7 @@ def pipeline_corpus_clean(spark, sf_dir):
     )
 
     # 4. quality gate: length + type/token ratio (integer arithmetic only),
-    # over columns already computed at the persisted stage
+    # over columns already computed at the pinned stage
     result = (
         survivors.join(drop_near, "doc_id", "left_anti")
         .filter((F.col("n_tok") >= 20) & (10 * F.col("n_uniq") >= 3 * F.col("n_tok")))
@@ -436,28 +438,10 @@ def pipeline_corpus_clean(spark, sf_dir):
             big(F.col("n_uniq")).alias("n_uniq"),
         )
     )
-    # Release the corpus-sized cache when the caller drops the result: the
-    # finalizer holds the only extra reference to `survivors`, fires on the
-    # result handle's GC, and is inert at interpreter shutdown (the JVM dies
-    # with the session; nothing to clean, and py4j may already be gone).
-    # CALLER CONTRACT: hold (or execute) THIS handle directly. Deriving a new
-    # frame and dropping the original (df2 = fn(...).select(...)) fires the
-    # finalizer before execution — correctness is unaffected, but the diamond
-    # reuse silently degrades to a recompute.
-    fin = weakref.finalize(result, _unpersist_quietly, survivors)
-    fin.atexit = False
-    # The minhash library pins its own group/mask diamonds to `near_pairs`
-    # (functions/pins.py) — same bounded lifetime, same owner handle.
-    from eviction_lab_etl_spark.functions.pins import adopt_pins
-
-    return adopt_pins(result, near_pairs)
-
-
-def _unpersist_quietly(df) -> None:
-    try:
-        df.unpersist()
-    except Exception:
-        pass  # session already torn down — nothing left to release
+    # The survivors pin (on `tokens`) and the minhash library's own
+    # group/mask pins (on `near_pairs`) move to one owner: the result
+    # handle the caller holds.
+    return adopt_pins(result, tokens, near_pairs)
 
 
 def prefix_candidates(part):
@@ -1243,14 +1227,14 @@ def search_mmr_diverse(spark, sf_dir):
     joins, never data-proportional — and since round 8 lives in
     `functions/rerank.py::mmr_rerank` with PARAMETRIC k (round-7 verdict
     item 6: top-10 diversification is a parameter change, not a
-    copy-paste), the `_truncate` lineage discipline packaged inside
+    copy-paste), the `pins.truncate` lineage discipline packaged inside
     (without it the unrolled plan references the candidate subtree ~2^k
     times and Catalyst analysis dominates the wall — measured 4.8 s at
     sf0.1 for ~KB of data). This query binds it at k = 5; a hypothesis
     property pins the library against a pure-Python greedy replica on
     adversarial candidate sets (tests/test_library.py)."""
+    from eviction_lab_etl_spark.functions.pins import truncate
     from eviction_lab_etl_spark.functions.rerank import mmr_rerank
-    from eviction_lab_etl_spark.operators.clustering import _truncate
     from eviction_lab_etl_spark.operators.dedup_text import cosine
 
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
@@ -1269,7 +1253,7 @@ def search_mmr_diverse(spark, sf_dir):
         )
     )
     w_rel = Window.orderBy(F.desc("rel"), "doc_id")
-    cand = _truncate(
+    cand = truncate(
         scored.orderBy(F.desc("rel"), "doc_id")
         .limit(20)
         .withColumn("rel_rank", F.row_number().over(w_rel).cast("bigint"))

@@ -117,31 +117,26 @@ def udf_pandas_agg(spark, sf_dir):
 def udtf_explode_pos(spark, sf_dir):
     """Python UDTF (PySpark ≥3.5): tokenize with 1-based positions. The DuckDB
     oracle zips two parallel unnests (DuckDB 1.0 lacks WITH ORDINALITY).
-    Falls back to the semantically-identical JVM posexplode if UDTF
-    registration is unavailable in the running session."""
-    docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    try:
-        from pyspark.sql.functions import udtf
+    Arrow-batched per UDTF (``useArrow=True``), so the boundary does not
+    depend on the session's pythonUDTF.arrow.enabled conf."""
+    from pyspark.sql.functions import udtf
 
-        @udtf(returnType="pos bigint, word string")
-        class TokenizeWithPos:
-            def eval(self, text: str):
-                for i, word in enumerate(text.split(" ")):
-                    yield i + 1, word
+    @udtf(returnType="pos bigint, word string", useArrow=True)
+    class TokenizeWithPos:
+        def eval(self, text: str):
+            for i, word in enumerate(text.split(" ")):
+                yield i + 1, word
 
-        spark.udtf.register("tokenize_with_pos", TokenizeWithPos)
-        docs.createOrReplaceTempView("udtf_docs_head")
-        return spark.sql(
-            """
-            SELECT d.doc_id, t.pos, t.word
-            FROM udtf_docs_head d, LATERAL tokenize_with_pos(d.text) t
-            """
-        )
-    except Exception:
-        # JVM fallback: posexplode is the built-in equivalent (0-based → +1).
-        return docs.select(
-            "doc_id", F.posexplode(F.split("text", " ")).alias("p", "word")
-        ).select("doc_id", (F.col("p") + 1).cast("bigint").alias("pos"), "word")
+    spark.udtf.register("tokenize_with_pos", TokenizeWithPos)
+    load(spark, sf_dir, "documents").filter(
+        F.col("doc_id") < 50
+    ).createOrReplaceTempView("udtf_docs_head")
+    return spark.sql(
+        """
+        SELECT d.doc_id, t.pos, t.word
+        FROM udtf_docs_head d, LATERAL tokenize_with_pos(d.text) t
+        """
+    )
 
 
 @query(
@@ -207,15 +202,14 @@ def udtf_dynamic_schema(spark, sf_dir):
     view: Catalyst cannot push a predicate through a UDTF, so filtering
     after the LATERAL would tokenize the whole corpus and discard 80% —
     pre-filtering keeps the pushdown at the parquet scan. Arrow transfer
-    for UDTFs has its own flag (pythonUDTF.arrow.enabled — NOT covered by
-    the general pandas-UDF Arrow conf), enabled here so the boundary is
-    Arrow-batched like the rest of the Python surface."""
+    is requested per UDTF (``useArrow=True``) rather than through the
+    session's pythonUDTF.arrow.enabled conf, which this query leaves
+    untouched: the boundary is Arrow-batched like the rest of the Python
+    surface whatever ran before it."""
     from pyspark.sql.functions import AnalyzeArgument, AnalyzeResult, udtf
     from pyspark.sql.types import StringType, StructType
 
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-
-    @udtf
+    @udtf(useArrow=True)
     class HeadTokens:
         @staticmethod
         def analyze(text: AnalyzeArgument, n: AnalyzeArgument) -> AnalyzeResult:

@@ -46,7 +46,7 @@ def test_cc_chain_converges_logarithmically(spark):
     rnd.shuffle(ids)
     chain = [(ids[i], ids[i + 1]) for i in range(99)]
     edges = spark.createDataFrame(chain, "a long, b long")
-    labels, rounds = _cc_rounds(edges, 25, None)
+    labels, rounds = _cc_rounds(edges, 25)
     rows = labels.collect()
     assert len(rows) == 100
     assert {r.lbl for r in rows} == {1000}
@@ -64,19 +64,16 @@ def test_cc_raises_instead_of_returning_partial_labels(spark):
 def test_cc_reliable_checkpoint_when_dir_configured(spark, tmp_path):
     # With a checkpoint dir set, iterations must truncate lineage through
     # reliable checkpoint() files (survives executor loss on a cluster), not
-    # executor-local blocks.
+    # executor-local blocks. The dir is the session's (setCheckpointDir):
+    # connected_components only follows it.
     ckpt = tmp_path / "ckpt"
     edges = spark.createDataFrame(
         [(7, 3), (3, 9), (9, 1), (20, 30), (30, 10), (10, 20)],
         "a long, b long",
     )
+    spark.sparkContext.setCheckpointDir(str(ckpt))
     try:
-        got = {
-            (r.v, r.lbl)
-            for r in connected_components(
-                edges, checkpoint_dir=str(ckpt)
-            ).collect()
-        }
+        got = {(r.v, r.lbl) for r in connected_components(edges).collect()}
         assert got == {
             (1, 1), (3, 1), (7, 1), (9, 1),
             (10, 10), (20, 10), (30, 10),

@@ -220,6 +220,91 @@ def test_adopt_pins_twice_raises(spark):
     del first
 
 
+def test_pin_to_self_raises(spark):
+    """A frame pinned to itself would be held strongly by its own
+    finalizer, so it could never be collected and its cache never freed."""
+    import pytest
+
+    from eviction_lab_etl_spark.functions.pins import pin_to
+
+    df = spark.range(3)
+    with pytest.raises(ValueError, match="one of the pinned frames"):
+        pin_to(df, spark.range(2), df)
+    assert not df.is_cached
+
+
+def _materializations(src: str) -> list[int]:
+    """Line numbers of ``.persist(``/``.cache(``/``.checkpoint(``/
+    ``.localCheckpoint(`` calls and of ``weakref.finalize`` — the cache and
+    lineage-cut lifetimes that only functions/pins.py may decide."""
+    import ast
+
+    hits = []
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            if node.func.attr in {"persist", "cache", "checkpoint", "localCheckpoint"}:
+                hits.append(node.lineno)
+        elif isinstance(node, ast.Attribute) and node.attr == "finalize":
+            if isinstance(node.value, ast.Name) and node.value.id == "weakref":
+                hits.append(node.lineno)
+    return sorted(hits)
+
+
+def test_materialization_detector():
+    bad = (
+        "df.persist()\n"
+        "x = df.select('a').cache()\n"
+        "df.checkpoint(eager=True)\n"
+        "df.localCheckpoint()\n"
+        "fin = weakref.finalize(df, print)\n"
+    )
+    assert _materializations(bad) == [1, 2, 3, 4, 5]
+    ok = (
+        "pin_to(out, groups)\n"
+        "truncate(df)\n"
+        "df.writeStream.option('checkpointLocation', p)\n"
+        "df.unpersist()\n"
+    )
+    assert _materializations(ok) == []
+
+
+def test_only_pins_module_materializes():
+    """One materialization module: every persist, checkpoint and finalizer
+    in the package goes through functions/pins.py (pin_to, adopt_pins,
+    truncate), so one module decides how long a cached frame lives."""
+    import glob
+    import os
+
+    import eviction_lab_etl_spark
+
+    pkg = os.path.dirname(eviction_lab_etl_spark.__file__)
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg)
+        if rel == os.path.join("functions", "pins.py"):
+            continue
+        with open(path) as fh:
+            offenders += [f"{rel}:{n}" for n in _materializations(fh.read())]
+    assert not offenders, f"materialize through functions/pins.py: {offenders}"
+
+
+def test_udtf_queries_leave_session_conf(spark, sf_dir):
+    """Both UDTF queries request Arrow per function (useArrow=True), so
+    running them leaves the session's pythonUDTF.arrow.enabled as it was:
+    the Python boundary of later queries does not depend on query order."""
+    from eviction_lab_etl_spark.registry import QUERIES
+
+    key = "spark.sql.execution.pythonUDTF.arrow.enabled"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        for name in ("udtf_dynamic_schema", "udtf_explode_pos"):
+            assert QUERIES[name](spark, sf_dir).count() > 0
+            assert spark.conf.get(key) == "false", name
+    finally:
+        spark.conf.set(key, saved)
+
+
 def test_minhash_family_spark_duck_identical(spark):
     """The one MinHash family is cross-engine: Spark's
     ``minhash_signatures`` and DuckDB's ``minhash_sig_duck`` give identical

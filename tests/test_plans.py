@@ -271,41 +271,94 @@ def test_corpus_clean_single_scan_and_tokenize(spark, sf_dir):
     assert m["sortmerge_joins"] == 0
 
 
-def test_corpus_clean_cache_pin_is_bounded(spark, sf_dir):
-    """Round-7 verdict item 2: the tokenized-survivor cache (≈ the corpus,
-    token arrays included) must NOT outlive the query result. The weakref
-    finalizer unpersists it when the result handle is dropped, so the pin's
-    lifetime equals the consumer's — a later query in the same session
-    starts with the executor memory back."""
+def _cached_rdd_ids(spark) -> set[int]:
+    """Ids of RDDs holding cache blocks that a ``persist()`` put there.
+    Lineage checkpoints (``pins.truncate``) also hold blocks, but they ARE
+    their frame's lineage and are reclaimed by Spark's ContextCleaner, not
+    by a pin, so they are left out."""
+    jsc = spark.sparkContext._jsc
+    persistent = jsc.getPersistentRDDs()
+    ids = set()
+    for info in jsc.sc().getRDDStorageInfo():
+        rdd = persistent.get(info.id())
+        if rdd is not None and not rdd.rdd().isCheckpointed():
+            ids.add(info.id())
+    return ids
+
+
+@pytest.mark.parametrize(
+    "name,pins",
+    [
+        ("pipeline_corpus_clean", True),
+        # connected components reads its edges once, through a checkpoint
+        ("dedup_cluster_cc", False),
+        ("graph_triangle_count", True),
+        ("sim_containment_prefix", True),
+    ],
+)
+def test_corpus_clean_cache_pin_is_bounded(spark, sf_dir, name, pins):
+    """Round-7 verdict item 2, for every query that materializes a shared
+    frame: no cache the query made may outlive its result. The finalizer
+    (functions/pins.py) unpersists the pinned frames when the result handle
+    is dropped, so the pin's lifetime equals the consumer's — a later query
+    in the same session starts with the executor memory back and reads
+    nothing an earlier query computed."""
     import gc
     import time
 
-    from eviction_lab_etl_spark.registry import QUERIES
-
-    sc = spark.sparkContext
-
-    def cached_ids():
-        # Track SPECIFIC RDD ids, not counts: the suite session holds other
-        # finalizer-bounded caches whose async unpersists can fire between
-        # our two measurements, making absolute counts race (seen once:
-        # 8 -> 7+1 across the query run).
-        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
-
-    before = cached_ids()
-    df = QUERIES["pipeline_corpus_clean"](spark, sf_dir)
+    # Track SPECIFIC RDD ids, not counts: the suite session holds other
+    # finalizer-bounded caches whose async unpersists can fire between our
+    # two measurements, making absolute counts race (seen once: 8 -> 7+1
+    # across the query run).
+    before = _cached_rdd_ids(spark)
+    df = registry.QUERIES[name](spark, sf_dir)
     df.count()
-    new_ids = cached_ids() - before
-    assert new_ids, "diamond was never materialized into cache"
+    new_ids = _cached_rdd_ids(spark) - before
+    if pins:
+        assert new_ids, "diamond was never materialized into cache"
+    else:
+        assert not new_ids, f"{name} pins nothing, yet cached {new_ids}"
     del df
     gc.collect()
     # unpersist(blocking=False): entry removal is sync, block delete async
     for _ in range(50):
-        if not (cached_ids() & new_ids):
+        if not (_cached_rdd_ids(spark) & new_ids):
             break
         time.sleep(0.1)
-    assert not (cached_ids() & new_ids), (
-        "corpus-sized cache outlived the result"
-    )
+    assert not (_cached_rdd_ids(spark) & new_ids), f"{name}: cache outlived the result"
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "pipeline_corpus_clean",
+        "graph_triangle_count",
+        "sim_containment_prefix",
+        "dedup_minhash_pairs",
+    ],
+)
+def test_pinned_query_identical_under_eviction(spark, sf_dir, name):
+    """pins.py's claim, tested: the pins are a plan-shape optimization
+    only. Unpersisting every frame a result pins, between building the plan
+    and collecting it, must give the same canonical rows as the pinned run
+    (an eviction degrades to recompute, never to other values)."""
+    import gc
+
+    from eviction_lab_etl_spark.functions import pins
+    from tests.compare import canon_spark
+
+    df = registry.QUERIES[name](spark, sf_dir)
+    pinned = canon_spark(df)
+    del df
+    gc.collect()
+
+    df = registry.QUERIES[name](spark, sf_dir)
+    _, _, (frames,), _ = pins._PINS[df].peek()
+    assert frames, f"{name} pins nothing; the eviction case would be vacuous"
+    for f in frames:
+        f.unpersist(blocking=True)
+    assert not any(f.is_cached for f in frames)
+    assert canon_spark(df) == pinned
 
 
 def test_round5_operator_plan_shapes(spark, sf_dir):
