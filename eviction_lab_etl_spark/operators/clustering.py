@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from eviction_lab_etl_spark.functions.determinism import big
-from eviction_lab_etl_spark.functions.pins import adopt_pins, pin_to, truncate
+from eviction_lab_etl_spark.functions.pins import pin_to, truncate
 from eviction_lab_etl_spark.registry import query
 
 
@@ -174,9 +174,10 @@ def neardup_edges(spark, sf_dir) -> DataFrame:
     strength) — the single shared derivation behind clustering, canonical
     selection, triangle counting, and the degree histogram (its SQL twin is
     ``_NEARDUP_EDGES_SQL``). One definition, one threshold, and no cache of
-    its own: a caller that reads the edges in several plan branches pins
-    them to its OWN result (functions/pins.py), so nothing outlives the
-    query that built them."""
+    its own: a caller pins the edges to its OWN result (functions/pins.py)
+    only where that measurably beats recomputing them (``graph_bfs_layers``,
+    whose eager rounds each read them), so nothing outlives the query that
+    built them."""
     from eviction_lab_etl_spark.operators.dedup_text import sim_jaccard_pairs
 
     pairs = sim_jaccard_pairs(spark, sf_dir)
@@ -286,8 +287,6 @@ def graph_triangle_count(spark, sf_dir):
     endpoints first (node-iterator++), bounding wedges by the arboricity;
     the id-ordered form here keeps the oracle exact and the join topology
     identical."""
-    # The edge list feeds FIVE consumers here (vertex count, edge count,
-    # three join legs): pinned to the result, it is built once per query.
     edges = neardup_edges(spark, sf_dir)
     verts = (
         edges.select(F.col("a").alias("v"))
@@ -304,7 +303,7 @@ def graph_triangle_count(spark, sf_dir):
         )
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    return pin_to(verts.crossJoin(n_edges).crossJoin(tri), edges)
+    return verts.crossJoin(n_edges).crossJoin(tri)
 
 
 @query(
@@ -325,8 +324,7 @@ def graph_degree_hist(spark, sf_dir):
     diagnostic read BEFORE clustering: a heavy right tail (one doc similar
     to thousands) predicts hot keys in the connected-components shuffle and
     wedge explosion in triangle counting, and is exactly what degree-based
-    edge orientation / salting decisions key on. The shared edge list,
-    pinned to the result (both sides of the symmetric union read it); two
+    edge orientation / salting decisions key on. The shared edge list; two
     small aggregates (per-vertex degree, then count-per-degree) on top — the
     histogram is ≤ max-degree rows no matter the corpus size."""
     edges = neardup_edges(spark, sf_dir)
@@ -335,7 +333,7 @@ def graph_degree_hist(spark, sf_dir):
     )
     deg = sym.groupBy("v").agg(F.count(F.lit(1)).alias("degree"))
     hist = deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_vertices"))
-    return pin_to(hist, edges)
+    return hist
 
 
 @query(
@@ -440,8 +438,7 @@ def graph_pagerank(spark, sf_dir):
     # link table: (v, u, d) where d = deg(u) — referenced by all three
     # unrolled join steps. Not pinned: the three link subtrees are
     # byte-identical, so Spark's ReuseExchange computes the link shuffle
-    # once per execution and streams it to every consumer. The edge list
-    # under it IS pinned (to the result): sym, deg and every step read it.
+    # once per execution and streams it to every consumer.
     link = sym.join(deg.select(F.col("v").alias("u"), "d"), "u")
     ranks = deg.select("v", F.lit(1000000).cast("long").alias("r"))
     for _ in range(3):
@@ -452,7 +449,7 @@ def graph_pagerank(spark, sf_dir):
                 F.expr("CAST(150000 + (85 * sum(r div d)) div 100 AS BIGINT)").alias("r")
             )
         )
-    return pin_to(ranks.select("v", F.col("r").alias("pagerank")), edges)
+    return ranks.select("v", F.col("r").alias("pagerank"))
 
 
 @query(
@@ -483,9 +480,10 @@ def graph_bfs_layers(spark, sf_dir):
     CURRENT frontier (vertices first reached last round, typically a small
     fraction of the graph) against the edge list on the source vertex, then
     a min-depth merge keyed on vertex. The edge list is the near-dup
-    projection (orders of magnitude below the corpus), pinned for the
-    query because every round reads it; per-round cost is frontier-proportional, never
-    all-pairs, and the depth cap bounds the rounds. At a billion edges each
+    projection (orders of magnitude below the corpus), pinned while the
+    rounds run because every round reads it; per-round cost is
+    frontier-proportional, never all-pairs, and the depth cap bounds the
+    rounds. At a billion edges each
     round is one shuffle of (frontier ⋈ edges) + one vertex-keyed agg —
     the Pregel step, expressed declaratively."""
     edges = neardup_edges(spark, sf_dir)
@@ -493,11 +491,12 @@ def graph_bfs_layers(spark, sf_dir):
         edges.select(F.col("b").alias("v"), F.col("a").alias("u"))
     )
     # Pinned before bfs_layers runs: each of its eager truncations reads
-    # the edges again.
+    # the edges again. The result is a checkpoint that reads no edges, so
+    # the pin is released when this function returns.
     sym = pin_to(sym, edges)
     seeds = sym.filter(F.col("v") < 20).select("v").distinct()
     layers = bfs_layers(sym, seeds, max_depth=3)
-    return adopt_pins(layers.select(F.col("v").alias("doc_id"), "depth"), sym)
+    return layers.select(F.col("v").alias("doc_id"), "depth")
 
 
 def bfs_layers(sym_edges: DataFrame, seeds: DataFrame, max_depth: int) -> DataFrame:

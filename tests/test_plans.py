@@ -292,7 +292,9 @@ def _cached_rdd_ids(spark) -> set[int]:
         ("pipeline_corpus_clean", True),
         # connected components reads its edges once, through a checkpoint
         ("dedup_cluster_cc", False),
-        ("graph_triangle_count", True),
+        ("graph_triangle_count", False),
+        # BFS pins its edges only while its eager rounds run
+        ("graph_bfs_layers", False),
         ("sim_containment_prefix", True),
     ],
 )
@@ -302,7 +304,8 @@ def test_corpus_clean_cache_pin_is_bounded(spark, sf_dir, name, pins):
     (functions/pins.py) unpersists the pinned frames when the result handle
     is dropped, so the pin's lifetime equals the consumer's — a later query
     in the same session starts with the executor memory back and reads
-    nothing an earlier query computed."""
+    nothing an earlier query computed (a query that pins nothing must plan
+    no in-memory scan at all)."""
     import gc
     import time
 
@@ -318,6 +321,9 @@ def test_corpus_clean_cache_pin_is_bounded(spark, sf_dir, name, pins):
         assert new_ids, "diamond was never materialized into cache"
     else:
         assert not new_ids, f"{name} pins nothing, yet cached {new_ids}"
+        # nor may it read a cache an earlier query left behind
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" not in plan, f"{name} reads a cache"
     del df
     gc.collect()
     # unpersist(blocking=False): entry removal is sync, block delete async
@@ -332,16 +338,17 @@ def test_corpus_clean_cache_pin_is_bounded(spark, sf_dir, name, pins):
     "name",
     [
         "pipeline_corpus_clean",
-        "graph_triangle_count",
         "sim_containment_prefix",
         "dedup_minhash_pairs",
     ],
 )
 def test_pinned_query_identical_under_eviction(spark, sf_dir, name):
     """pins.py's claim, tested: the pins are a plan-shape optimization
-    only. Unpersisting every frame a result pins, between building the plan
-    and collecting it, must give the same canonical rows as the pinned run
-    (an eviction degrades to recompute, never to other values)."""
+    only. The result's executed plan is built over the pinned caches and
+    the caches are filled; then every pinned frame is unpersisted, so the
+    plan's in-memory scans find their blocks gone. Collecting it must give
+    the same canonical rows as the pinned run (an eviction degrades to
+    recompute, never to other values)."""
     import gc
 
     from eviction_lab_etl_spark.functions import pins
@@ -355,6 +362,9 @@ def test_pinned_query_identical_under_eviction(spark, sf_dir, name):
     df = registry.QUERIES[name](spark, sf_dir)
     _, _, (frames,), _ = pins._PINS[df].peek()
     assert frames, f"{name} pins nothing; the eviction case would be vacuous"
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan, f"{name}: plan reads no pinned cache"
+    df.count()  # fills the caches the plan reads
     for f in frames:
         f.unpersist(blocking=True)
     assert not any(f.is_cached for f in frames)
